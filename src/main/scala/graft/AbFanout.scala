@@ -1,20 +1,21 @@
 package graft
 
-/** Builder-side interleaved A/B for plan-time graft confs: alternates the
-  * `CONF` key (default the r16 derivation fan-out) on/off within ONE session
-  * (the conf is read at plan time), timing each named query once per mode
+/** Developer-side interleaved A/B for a plan-time boolean conf: alternates the
+  * `CONF` key on/off within ONE session (the conf is read at plan time),
+  * timing each named query once per mode
   * per round — the same-JVM interleaving that cancels the box's minute-scale
   * load drift, which single whole-catalog runs cannot (observed swings of 3×
   * per query between back-to-back runs). Prints min-per-mode per query.
   * Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, ROUNDS,
-  * CONF (plan-time boolean conf key to flip); args = query names.
+  * CONF (required: plan-time boolean conf key to flip); args = query names.
   */
 object AbFanout {
   def main(args: Array[String]): Unit = {
+    val confKey = sys.env.getOrElse("CONF",
+      sys.error("CONF is required: the plan-time boolean conf key to flip on/off"))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val rounds = sys.env.getOrElse("ROUNDS", "3").toInt
-    val confKey = sys.env.getOrElse("CONF", "spark.graft.derive.fanout")
     val spark = org.apache.spark.sql.SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -5,17 +5,22 @@ package graft
   * the optimization rounds commit under `plans/`. No timing, no actions (the
   * formatted plan is the pre-execution adaptive plan, same as an `explain`
   * call before the first action).
-  * Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, OUT_DIR (default plans/r16),
+  * Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, OUT_DIR (default plans),
   * SUFFIX (default `_after`), CONFS (comma-separated `key=value` session
-  * confs set before planning — dump `_before` plans by flipping the
-  * plan-time graft confs off); args = query names (empty = whole catalog).
+  * confs set before planning); args = query names (empty = whole catalog).
   */
 object DumpPlans {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val outDir = sys.env.getOrElse("OUT_DIR", "plans/r16")
+    val outDir = sys.env.getOrElse("OUT_DIR", "plans")
     val suffix = sys.env.getOrElse("SUFFIX", "_after")
+    val confs = sys.env.get("CONFS").toSeq.flatMap(_.split(',').filter(_.nonEmpty)).map { kv =>
+      kv.split("=", 2) match {
+        case Array(k, v) => k -> v
+        case _ => sys.error(s"CONFS entry '$kv' is not key=value")
+      }
+    }
     val spark = org.apache.spark.sql.SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -24,10 +29,7 @@ object DumpPlans {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Tables.tune(spark)
-    sys.env.get("CONFS").foreach(_.split(',').filter(_.nonEmpty).foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      spark.conf.set(k, v)
-    })
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
     new java.io.File(outDir).mkdirs()
     val names = if (args.isEmpty) SparkEntry.queries.keys.toSeq.sorted else args.toSeq
     // fail fast on unknown names BEFORE writing any file (ADVICE r16 #3: a

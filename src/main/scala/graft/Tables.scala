@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, unix_micros}
 import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 
+import scala.util.control.NonFatal
+
 /** Loaders for the driver-generated TESTDATA tables plus session tuning.
   *
   * All runtime-settable confs are (re)applied on every load so the queries
@@ -110,7 +112,26 @@ object Tables {
       val p = new org.apache.hadoop.fs.Path(path)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       fs.getContentSummary(p).getLength
-    } catch { case _: Throwable => Long.MaxValue }
+    } catch { case NonFatal(_) => Long.MaxValue }
+
+  /** True when `name`'s scan cannot fill even a quarter of the session's
+    * cores from its natural splits — the size gate [[deriveFanOut]] fires on,
+    * and the regime where parallel duplicate subtrees are cheaper than a
+    * shared (serializing) derivation. At cluster scale
+    * (bytes ≫ cores × maxPartitionBytes) this is always false.
+    */
+  def scanIsTiny(spark: SparkSession, sfDir: String, name: String): Boolean =
+    pathScanIsTiny(spark, s"$sfDir/$name.parquet")
+
+  /** [[scanIsTiny]] for an arbitrary path (e.g. a posting-store directory). */
+  def pathScanIsTiny(spark: SparkSession, path: String): Boolean = {
+    val p = spark.sparkContext.defaultParallelism
+    val maxSplit = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+      spark.conf.get("spark.sql.files.maxPartitionBytes", "128m").stripSuffix("b"))
+    val bytes = pathBytes(spark, path)
+    val naturalTasks = math.max(1L, (bytes + maxSplit - 1) / maxSplit)
+    naturalTasks * 4 <= p
+  }
 
   /** Size-gated fan-out for CPU-heavy derivation stages (explode → shingle /
     * md5 / levenshtein chains, ~10²–10³ CPU per input byte vs a plain scan).
@@ -135,39 +156,16 @@ object Tables {
     * simhash precedent); empty = round-robin, which preserves every
     * downstream exchange exactly as unfanned plans had them.
     */
-  /** True when `name`'s scan cannot fill even a quarter of the session's
-    * cores from its natural splits — the size gate [[deriveFanOut]] fires on,
-    * and the regime where parallel duplicate subtrees are cheaper than a
-    * shared (serializing) derivation. At cluster scale
-    * (bytes ≫ cores × maxPartitionBytes) this is always false.
-    */
-  def scanIsTiny(spark: SparkSession, sfDir: String, name: String): Boolean =
-    pathScanIsTiny(spark, s"$sfDir/$name.parquet")
-
-  /** [[scanIsTiny]] for an arbitrary path (e.g. a posting-store directory). */
-  def pathScanIsTiny(spark: SparkSession, path: String): Boolean = {
-    val p = spark.sparkContext.defaultParallelism
-    val maxSplit = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-      spark.conf.get("spark.sql.files.maxPartitionBytes", "128m").stripSuffix("b"))
-    val bytes = pathBytes(spark, path)
-    val naturalTasks = math.max(1L, (bytes + maxSplit - 1) / maxSplit)
-    naturalTasks * 4 <= p
-  }
-
   def deriveFanOut(
       spark: SparkSession,
       sfDir: String,
       name: String,
       df: DataFrame,
-      keys: Seq[Column] = Nil): DataFrame = {
-    // plan-time kill-switch: lets one binary A/B the fan-out in a single
-    // session (and gives operators an escape hatch); default ON
-    if (!spark.conf.get("spark.graft.derive.fanout", "true").toBoolean) return df
+      keys: Seq[Column] = Nil): DataFrame =
     if (scanIsTiny(spark, sfDir, name)) {
       val p = spark.sparkContext.defaultParallelism
       if (keys.nonEmpty) df.repartition(p, keys: _*) else df.repartition(p)
     } else df
-  }
 
   /** [[documents]] projected to (doc_id, text) — the derivation payload —
     * and fanned out for derivation-heavy consumers (project BEFORE the

@@ -42,23 +42,14 @@ object SimilarityOps {
     * bottleneck"): the IVF/PQ family's codebook expressions built ~10⁴
     * literal NODES per query (16 centroids × 64 dims, 8×8 PQ codebooks ×
     * 8 dims, replicated across probe/LUT/encode stages), and every optimizer
-    * rule walks every node — per-stage attribution (graft.ann.AdcProfile)
-    * measured ~0.8 s of q_ivf_adc_topk's ~1.8 s warm cost as pure Catalyst
-    * PLANNING. A typedLit array evaluates identically (same values, same
-    * ArrayType(Double, containsNull=false) — CreateArray of foldable
-    * literals constant-folds to exactly this) but costs one node. Conf
-    * `spark.graft.ann.typedlit` (plan-time, default on) for interleaved A/B.
+    * rule walks every node — ~0.8 s of q_ivf_adc_topk's ~1.8 s warm cost
+    * was Catalyst PLANNING. A typedLit array evaluates identically (same
+    * values; CreateArray of foldable literals constant-folds to the same
+    * literal) but costs one node (A/B 0.76–0.99).
     */
-  private[ann] def typedLitOn: Boolean =
-    org.apache.spark.sql.SparkSession.active.conf
-      .get("spark.graft.ann.typedlit", "true").toBoolean
+  private[ann] def litArr(xs: Seq[Double]): Column = typedLit(xs.toSeq)
 
-  private[ann] def litArr(xs: Seq[Double]): Column =
-    if (typedLitOn) typedLit(xs.toSeq) else array(xs.map(lit(_)): _*)
-
-  private[ann] def litMat(m: Seq[Seq[Double]]): Column =
-    if (typedLitOn) typedLit(m.map(_.toSeq).toSeq)
-    else array(m.map(r => array(r.map(lit(_)): _*)): _*)
+  private[ann] def litMat(m: Seq[Seq[Double]]): Column = typedLit(m.map(_.toSeq).toSeq)
 
   /** Grid size for [[gridPairs]]. 8×8 = 64 cells saturates local[32]; on a
     * real cluster B scales with √cores so per-task memory stays O(n/B).
@@ -1931,8 +1922,8 @@ object SimilarityOps {
     * matrix indexed by the ROW's m, so one expression serves all subspaces.
     */
   private def pqAssignCol(cb: IndexedSeq[IndexedSeq[Array[Double]]]): Column = {
-    val c2Mat = array(cb.map(ks => array(ks.map(c => lit(selfDot(c))): _*)): _*)
-    val cbMat = array(cb.map(ks => litMat(ks.map(_.toIndexedSeq))): _*)
+    val c2Mat = litMat(cb.map(_.map(selfDot)))
+    val cbMat = typedLit(cb.map(_.map(_.toSeq)))
     val dists = array((0 until PqK).map { k =>
       element_at(element_at(c2Mat, col("m") + 1), k + 1) -
         lit(2.0) * call_function("dot_arrays", col("vm"),

@@ -126,8 +126,8 @@ object DedupOps {
     * per key per partition — never a per-shingle id list), hot keys vanish
     * at the join (the df side is pre-filtered to df ≤ cap), and the join
     * itself is AQE skew-splittable while the hot postings drain. The
-    * self-join sides downstream remain identical subplans, so their
-    * shuffles still dedup via ReuseExchange — same discipline as
+    * downstream posting grouping ([[pairStats]]) reuses the join's
+    * s-distribution — same discipline as
     * [[graft.text.CurationOps.sharedShingles]], measured 28% faster under a
     * planted 30%-hot shingle. Multiplicities ride along as `c`, keeping the
     * occurrence-level semantics (df, n_shingles, downstream intersection
@@ -147,24 +147,19 @@ object DedupOps {
     // size-gated fan-out (r16, guide §2.5/§6): the tokenize→shingle explode
     // below otherwise runs in the scan's task count — ONE task on a small
     // single-row-group file. Round-robin (no key): every downstream exchange
-    // — (doc_id, s) compression, df join, self-join — keeps its measured
+    // — (doc_id, s) compression, df join, posting grouping — keeps its measured
     // shape, the fan-out only parallelizes the explode stage feeding it.
-    shinglesWithSizeOf(Tables.documentsDerive(spark, sfDir), cap,
-      key = if (shingleHashKeyOn(spark)) Some(xxhash64(_)) else None)
-
-  /** Shuffle-key narrowing for the LIVE shingle family (guide §2.3): when on,
-    * every exchange/aggregation of the live pair queries keys on
-    * `xxhash64(shingle)` (8 bytes) instead of the ~30-byte 5-gram string —
-    * the shingle only ever serves as a grouping/join key, never an output
-    * column. Results are identical up to a 64-bit hash collision
-    * (~n²/2⁶⁵ — the same accepted trade as the substr family's truncated-md5
-    * window keys and the minhash chain's 48-bit shingle hash; the oracle,
-    * which keeps the string form, pins equality at every test SF). The
-    * STORED posting index keeps string keys: its `_overcap` set and probe
-    * path match batch shingles textually across generations.
-    */
-  private[graft] def shingleHashKeyOn(spark: SparkSession): Boolean =
-    spark.conf.get("spark.graft.shingle.hashkey", "true").toBoolean
+    // Shuffle-key narrowing (guide §2.3): the live family keys every
+    // exchange/aggregation on `xxhash64(shingle)` (8 bytes) instead of the
+    // ~30-byte 5-gram string — the shingle only ever serves as a grouping/join
+    // key, never an output column. Results are identical up to a 64-bit hash
+    // collision (~n²/2⁶⁵ — the same accepted trade as the substr family's
+    // truncated-md5 window keys and the minhash chain's 48-bit shingle hash;
+    // the oracle, which keeps the string form, pins equality at every test
+    // SF). The STORED posting index keeps string keys (`key = None`): its
+    // `_overcap` set and probe path match batch shingles textually across
+    // generations.
+    shinglesWithSizeOf(Tables.documentsDerive(spark, sfDir), cap, key = Some(xxhash64(_)))
 
   /** [[shinglesWithSize]] over an arbitrary (doc_id, text) relation — the
     * form [[ShingleIndex]] builds stores from (possibly a corpus subset:
@@ -182,10 +177,9 @@ object DedupOps {
   /** Per-(doc, shingle) occurrence groups of a (doc_id, text) relation —
     * compressed map-side (see [[shinglesWithSize]]'s discipline note).
     * `key`, when given, transforms the shingle BEFORE the first exchange
-    * (the (doc_id, s) compression), so a narrowing key (see
-    * [[shingleHashKeyOn]]) shrinks every downstream shuffle byte; `None`
-    * keeps the string — the stored-index contract, plan-identical to the
-    * pre-r16 form.
+    * (the (doc_id, s) compression), so a narrowing key (the live family's
+    * `xxhash64`) shrinks every downstream shuffle byte; `None` keeps the
+    * string — the stored-index contract.
     */
   private[dedup] def shingleOccurrencesOf(
       docs: DataFrame, key: Option[Column => Column] = None): DataFrame = {
@@ -202,57 +196,36 @@ object DedupOps {
   }
 
   /** Pair-candidate statistics `(id_a < id_b, inter, n_a, n_b)` from a capped
-    * shingle relation `(s, doc_id, c, n_shingles)`. Two plan shapes, chosen
-    * by `spark.graft.shingle.postings` (plan-time, default on):
-    *
-    *   - '''postings''' (r16, guide §2.4): group the relation into
-    *     per-shingle posting arrays — bounded at `cap` entries by the df
-    *     filter already applied — and expand ordered pairs IN-ROW, exactly
-    *     the [[ShingleIndex.allPairs]] serving shape, storeless. The shingle
-    *     relation crosses ONE exchange (the groupBy(s), reusing the df
-    *     join's s-distribution) and is read once; the self-join's second
-    *     read, both SMJ sorts, and the join operator vanish. The in-row
-    *     expansion is ≤ cap² bounded struct emissions per shingle — the same
-    *     bound the join's per-key fanout had.
-    *   - '''self-join''' (the pre-r16 form, kept as the A/B off-arm): the
-    *     aliased equi-join on s; sides are identical subplans so their
-    *     exchange dedups via ReuseExchange, but each SMJ side still sorts.
-    *
-    * Both shapes aggregate the identical multiset of (a-posting, b-posting)
-    * matches — the occurrence-pair count Σ c_a·c_b and first(n) per side —
-    * so rows are bit-identical (one oracle gates all callers).
+    * shingle relation `(s, doc_id, c, n_shingles)`: group the relation into
+    * per-shingle posting arrays — bounded at `cap` entries by the df filter
+    * already applied — and expand ordered pairs IN-ROW, exactly the
+    * [[ShingleIndex.allPairs]] serving shape, storeless. The shingle
+    * relation crosses ONE exchange (the groupBy(s), reusing the df join's
+    * s-distribution) and is read once, where an equi-join on s would read it
+    * twice and sort both sides (r16, guide §2.4). The in-row expansion is
+    * ≤ cap² bounded struct emissions per shingle; the occurrence-pair count
+    * Σ c_a·c_b and first(n) per side aggregate the same multiset of
+    * (a-posting, b-posting) matches the join would (one oracle gates all
+    * callers).
     */
-  private def pairStats(docs: DataFrame): DataFrame =
-    if (docs.sparkSession.conf.get("spark.graft.shingle.postings", "true").toBoolean) {
-      val pairsOf = flatten(transform(
-        col("postings"),
-        a => transform(
-          filter(col("postings"), b => a.getField("doc_id") < b.getField("doc_id")),
-          b => struct(a.as("a"), b.as("b")))))
-      docs
-        .groupBy("s")
-        .agg(collect_list(struct(col("doc_id"), col("c"), col("n_shingles"))).as("postings"))
-        .select(explode(pairsOf).as("p"))
-        .select(
-          col("p.a.doc_id").as("id_a"), col("p.b.doc_id").as("id_b"),
-          (col("p.a.c") * col("p.b.c")).as("cc"),
-          col("p.a.n_shingles").as("na"), col("p.b.n_shingles").as("nb"))
-        .groupBy("id_a", "id_b")
-        .agg(sum(col("cc")).as("inter"),
-          first(col("na")).as("n_a"), first(col("nb")).as("n_b"))
-    } else {
-      val a = docs.as("a")
-      val b = docs.as("b")
-      a.join(b, col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
-        .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-        .agg(
-          // occurrence-pair count over the compressed relation: each side
-          // carries its within-doc multiplicity, so Σ c_a·c_b equals the
-          // uncompressed join's count(*) exactly
-          sum(col("a.c") * col("b.c")).as("inter"),
-          first(col("a.n_shingles")).as("n_a"),
-          first(col("b.n_shingles")).as("n_b"))
-    }
+  private def pairStats(docs: DataFrame): DataFrame = {
+    val pairsOf = flatten(transform(
+      col("postings"),
+      a => transform(
+        filter(col("postings"), b => a.getField("doc_id") < b.getField("doc_id")),
+        b => struct(a.as("a"), b.as("b")))))
+    docs
+      .groupBy("s")
+      .agg(collect_list(struct(col("doc_id"), col("c"), col("n_shingles"))).as("postings"))
+      .select(explode(pairsOf).as("p"))
+      .select(
+        col("p.a.doc_id").as("id_a"), col("p.b.doc_id").as("id_b"),
+        (col("p.a.c") * col("p.b.c")).as("cc"),
+        col("p.a.n_shingles").as("na"), col("p.b.n_shingles").as("nb"))
+      .groupBy("id_a", "id_b")
+      .agg(sum(col("cc")).as("inter"),
+        first(col("na")).as("n_a"), first(col("nb")).as("n_b"))
+  }
 
   def ngramJaccardPairs(
       spark: SparkSession,
@@ -327,46 +300,30 @@ object DedupOps {
       threshold: Double = 0.6,
       cap: Int = RawDfCap): DataFrame = {
     val docs = shinglesWithSize(spark, sfDir, cap)
-    val stats =
-      if (spark.conf.get("spark.graft.shingle.postings", "true").toBoolean) {
-        // postings shape (r16 — see [[pairStats]]): ONE derivation serves
-        // both sides of the incremental join — the batch filter runs inside
-        // the bounded posting array (the [[ShingleIndex.incrementalPairs]]
-        // lambda, storeless), where the self-join form paid the whole
-        // tokenize→shingle→df pipeline TWICE because the batch filter on
-        // side a broke subtree identity with side b (and materializing the
-        // shared relation was measured slower at sf0.1 — r15 negative
-        // result, superseded by this shape rather than retried).
-        val pairsOf = flatten(transform(
-          filter(col("postings"), a => batchPred(a.getField("doc_id"))),
-          a => transform(
-            filter(col("postings"), b =>
-              a.getField("doc_id") < b.getField("doc_id") ||
-                (b.getField("doc_id") < a.getField("doc_id") &&
-                  !batchPred(b.getField("doc_id")))),
-            b => struct(a.as("a"), b.as("b")))))
-        docs
-          .groupBy("s")
-          .agg(collect_list(struct(col("doc_id"), col("c"), col("n_shingles"))).as("postings"))
-          .select(explode(pairsOf).as("p"))
-          .select(
-            col("p.a.doc_id").as("x"), col("p.b.doc_id").as("y"),
-            (col("p.a.c") * col("p.b.c")).as("cc"),
-            col("p.a.n_shingles").as("nx"), col("p.b.n_shingles").as("ny"))
-          .groupBy("x", "y")
-          .agg(sum(col("cc")).as("inter"),
-            first(col("nx")).as("n_x"), first(col("ny")).as("n_y"))
-      } else {
-        val a = docs.filter(batchPred(col("doc_id"))).as("a")
-        val b = docs.as("b")
-        a.join(b, col("a.s") === col("b.s") &&
-            (col("a.doc_id") < col("b.doc_id") || !batchPred(col("b.doc_id"))))
-          .groupBy(col("a.doc_id").as("x"), col("b.doc_id").as("y"))
-          .agg(
-            sum(col("a.c") * col("b.c")).as("inter"),
-            first(col("a.n_shingles")).as("n_x"),
-            first(col("b.n_shingles")).as("n_y"))
-      }
+    // postings shape (see [[pairStats]]): ONE derivation serves both sides —
+    // the batch filter runs inside the bounded posting array (the
+    // [[ShingleIndex.incrementalPairs]] lambda, storeless), where a self-join
+    // paid the tokenize→shingle→df pipeline TWICE because the batch filter on
+    // one side broke subtree identity with the other
+    val pairsOf = flatten(transform(
+      filter(col("postings"), a => batchPred(a.getField("doc_id"))),
+      a => transform(
+        filter(col("postings"), b =>
+          a.getField("doc_id") < b.getField("doc_id") ||
+            (b.getField("doc_id") < a.getField("doc_id") &&
+              !batchPred(b.getField("doc_id")))),
+        b => struct(a.as("a"), b.as("b")))))
+    val stats = docs
+      .groupBy("s")
+      .agg(collect_list(struct(col("doc_id"), col("c"), col("n_shingles"))).as("postings"))
+      .select(explode(pairsOf).as("p"))
+      .select(
+        col("p.a.doc_id").as("x"), col("p.b.doc_id").as("y"),
+        (col("p.a.c") * col("p.b.c")).as("cc"),
+        col("p.a.n_shingles").as("nx"), col("p.b.n_shingles").as("ny"))
+      .groupBy("x", "y")
+      .agg(sum(col("cc")).as("inter"),
+        first(col("nx")).as("n_x"), first(col("ny")).as("n_y"))
     stats
       .select(
         least(col("x"), col("y")).as("id_a"),
@@ -774,25 +731,21 @@ object DedupOps {
     // (doc_id, s, c) map-side, df as a grouped sum joined back (AQE
     // skew-splittable; a hot key's postings never funnel through one window
     // task), n_shingles over doc_id — a key no corpus makes hot (bounded by
-    // doc length). The self-join sides stay identical subplans, so their
-    // shuffles dedup via ReuseExchange. (The r2-era hash-agg variant that
-    // was measured 1.7× slower joined SIZES after pair aggregation without
-    // compressing first — the aliased self-join re-ran the scan+explode
-    // lineage per consumer; compression is what changes the verdict, per
-    // the sharedShingles measurement.)
+    // doc length). (The r2-era hash-agg variant that was measured 1.7×
+    // slower joined SIZES after pair aggregation without compressing first —
+    // the aliased self-join re-ran the scan+explode lineage per consumer;
+    // compression is what changes the verdict, per the sharedShingles
+    // measurement.)
     val wDoc = org.apache.spark.sql.expressions.Window.partitionBy("doc_id")
     // size-gated fan-out (r16): the canon window's exchange is AQE-coalesced
     // back to ~1 partition at small scale (its payload is the raw text), so
     // the explode below would still run single-task without this.
     val fanned = Tables.deriveFanOut(spark, sfDir, "documents", canon)
-    val exploded =
-      if (shingleHashKeyOn(spark))
-        // key narrowing (guide §2.3, see [[shingleHashKeyOn]]): hash before
-        // the first exchange so every shuffle carries 8 bytes, not the string
-        fanned.select(col("doc_id"), explode(shinglesFromToks(col("toks"))).as("s0"))
-          .select(col("doc_id"), xxhash64(col("s0")).as("s"))
-      else
-        fanned.select(col("doc_id"), explode(shinglesFromToks(col("toks"))).as("s"))
+    // key narrowing (see [[shinglesWithSize]]): hash before the first
+    // exchange so every shuffle carries 8 bytes, not the string
+    val exploded = fanned
+      .select(col("doc_id"), explode(shinglesFromToks(col("toks"))).as("s0"))
+      .select(col("doc_id"), xxhash64(col("s0")).as("s"))
     val perDoc = exploded.groupBy("doc_id", "s").agg(count(lit(1)).as("c"))
     val dfRel = perDoc.groupBy("s").agg(sum("c").as("df")).filter(col("df") <= cap)
     val coldDocs = perDoc.join(dfRel, "s")

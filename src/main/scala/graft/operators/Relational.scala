@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
+import scala.util.control.NonFatal
+
 import graft.Tables
 import Grid.{dsum, dsumSql}
 
@@ -32,27 +34,31 @@ object Relational {
       col("l_extendedprice").cast(DecimalType(18, 2)) *
         (lit(1).cast(DecimalType(18, 2)) - col("l_discount").cast(DecimalType(18, 2))))
       .cast(DoubleType)
-    // r17 (guide §2.3 aggregate before you shuffle / §2.5 skew), SIZE-GATED:
-    // when `orders` fits the broadcast threshold the old shape is already
-    // shuffle-free on the fact side (BHJ + map-side partial agg collapses any
-    // hot orderkey) and a pre-aggregation exchange only adds cost — measured
-    // on/off 1.74 at sf0.1, so the gate keeps the old shape there. When
-    // orders CANNOT broadcast (the bench's 10× skew probe, and any real
-    // scale), the join becomes a shuffled SMJ whose planted hot orderkey
-    // (50% of lineitems, under AQE's 256 MB skew-split threshold at probe
-    // scale) lands on ONE task — so group the fact table BY ITS OWN join key
-    // BEFORE the join: partial agg collapses every key map-side, the
-    // exchange carries ≤ one row per (task × orderkey), and the join becomes
-    // 1:1. o_orderkey is unique in orders, so grouping by l_orderkey first
-    // is row-identical to grouping the join output by o_orderkey.
+    // SIZE-GATED pre-aggregation (r17, guide §2.3/§2.5): when `orders`
+    // broadcasts, the fact side never shuffles and the map-side partial agg
+    // after the join collapses any hot orderkey, so pre-aggregating only adds
+    // an exchange (measured 1.74× slower at sf0.1). When it cannot, the
+    // shuffled join lands a hot orderkey on ONE task — so group lineitem by
+    // its own join key first: the exchange carries ≤ one row per
+    // (task × orderkey) and the join becomes 1:1 (row-identical, o_orderkey
+    // is unique). The size is Spark's own estimate: file bytes ×
+    // fileCompressionFactor against the broadcast threshold.
     val broadcastThreshold =
       try org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
         spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10m").toLowerCase)
-      catch { case _: Throwable => -1L } // "-1" (disabled) or unparseable
-    val ordersBroadcastable =
-      broadcastThreshold > 0 && Tables.tableBytes(spark, sfDir, "orders") < broadcastThreshold
-    val preagg = spark.conf.get("spark.graft.starjoin.preagg", (!ordersBroadcastable).toString)
-    if (preagg.toBoolean) {
+      catch { case NonFatal(_) => -1L } // "-1" (disabled) or unparseable
+    val compressionFactor =
+      spark.conf.get("spark.sql.sources.fileCompressionFactor", "1.0").toDouble
+    val ordersBroadcastable = broadcastThreshold > 0 &&
+      Tables.tableBytes(spark, sfDir, "orders") * compressionFactor < broadcastThreshold
+    if (ordersBroadcastable)
+      l.join(o, col("l_orderkey") === col("o_orderkey"))
+        .join(broadcast(c), col("o_custkey") === col("c_custkey"))
+        .groupBy("o_orderkey")
+        .agg(revenue.as("revenue"), count(lit(1)).as("n_lines"))
+        .orderBy(desc("revenue"), asc("o_orderkey"))
+        .limit(10)
+    else
       l.groupBy(col("l_orderkey"))
         .agg(revenue.as("revenue"), count(lit(1)).as("n_lines"))
         .join(o, col("l_orderkey") === col("o_orderkey"))
@@ -60,14 +66,6 @@ object Relational {
         .select(col("o_orderkey"), col("revenue"), col("n_lines"))
         .orderBy(desc("revenue"), asc("o_orderkey"))
         .limit(10)
-    } else {
-      l.join(o, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(c), col("o_custkey") === col("c_custkey"))
-        .groupBy("o_orderkey")
-        .agg(revenue.as("revenue"), count(lit(1)).as("n_lines"))
-        .orderBy(desc("revenue"), asc("o_orderkey"))
-        .limit(10)
-    }
   }
 
   val starJoinSql: String =

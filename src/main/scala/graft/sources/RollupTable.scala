@@ -11,10 +11,10 @@ import graft.operators.Grid
   *
   * Layout mirrors Druid's segment discipline: parquet partitioned by
   * `date/hour` (HOUR segmentGranularity), so every dashboard/history query
-  * with a time predicate prunes partitions at planning time. At 100 TB the
-  * writer runs as a streaming job (`StreamingDutyCycle.rollupPlan` +
-  * foreachBatch appends) with periodic compaction; here the batch twin
-  * materializes the identical table.
+  * with a time predicate prunes partitions at planning time. The streaming
+  * writer is [[streamingWriter]] over `StreamingDutyCycle.rollupPlanFull`
+  * (one replay-safe segment per micro-batch) with periodic compaction; the
+  * batch twin [[materialize]] builds the identical measure set.
   */
 object RollupTable {
 
@@ -192,8 +192,8 @@ object RollupTable {
   def writeSegment(batch: DataFrame, outPath: String, batchId: Long): Unit = {
     // A streaming store cannot heal like the batch one (no raw history to
     // rebuild from), so appending a batch whose measure set differs from the
-    // existing segments — e.g. the full-sketch plan into a store written by
-    // the lean plan — must fail FAST: a mixed store would read the absent
+    // existing segments — e.g. a store written before a measure was added —
+    // must fail FAST: a mixed store would read the absent
     // additive columns as NULL in old segments and silently undercount
     // every tile served from them. Checked once per store per JVM (the
     // first micro-batch), not per trigger.
@@ -227,8 +227,8 @@ object RollupTable {
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   /** The streaming counterpart of [[materialize]]: append-mode finalized 1 s
-    * groups from [[graft.streaming.StreamingDutyCycle.rollupPlan]] land in
-    * the same (date, hour) layout, one replay-safe segment per micro-batch.
+    * groups from [[graft.streaming.StreamingDutyCycle.rollupPlanFull]] land
+    * in the same (date, hour) layout, one replay-safe segment per micro-batch.
     * The exactly-once story is (watermarked append output) × (deterministic
     * segment overwrite); periodic compaction of old `batch=` dirs into the
     * batch table is [[materializeIncrement]].

@@ -14,36 +14,6 @@ import graft.operators.Grid
   * The clock is injected (SURVEY.md §7.4): callers pass `jobTimeMillis`, so
   * runs are deterministic and testable.
   */
-/** Streaming maintenance of the durable rollup table (SURVEY.md §7.2 step 3):
-  * the 1s rollup stream appended to the date/hour-partitioned layout via
-  * foreachBatch — the Druid ingest loop as one Structured Streaming job.
-  */
-object RollupStreamJob {
-
-  /** Attach the rollup stream to a readings stream and keep the partitioned
-    * table at `tablePath` up to date. Append mode: only watermark-closed
-    * buckets land, so re-runs never rewrite a bucket.
-    */
-  def start(
-      readings: DataFrame,
-      tablePath: String,
-      checkpoint: String,
-      cadence: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    StreamingDutyCycle
-      .rollupPlan(readings)
-      .withColumn("epoch_s", col("bucket").cast("long"))
-      .withColumn("date", to_date(col("bucket")))
-      .withColumn("hour", (expr("epoch_s div 3600") % 24).cast("int"))
-      .writeStream
-      .trigger(cadence)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").partitionBy("date", "hour").parquet(tablePath)
-        ()
-      }
-      .start()
-}
-
 object HistoryJob {
 
   /** One run of the history query as keyed JSON records. Field order matches

@@ -147,29 +147,13 @@ object StreamingDutyCycle {
         col("duty_cycle"))).as("value"))
 
   /** The second-granularity rollup (A4, `Druid_conf_power_raw_avro:8-26`) as
-    * a streaming aggregate: the durable partial-aggregate table every
-    * dashboard query reads. In production this runs with
-    * `Trigger.ProcessingTime`, writing date/hour-partitioned parquet via
-    * foreachBatch so downstream time predicates prune partitions.
-    */
-  def rollupPlan(readings: DataFrame, watermarkSec: Int = 2): DataFrame =
-    readings
-      .withWatermark("time", s"$watermarkSec seconds")
-      .groupBy(
-        window(col("time"), "1 second"),
-        col("house_id"),
-        col("appliance_id"),
-        col("appliance_name"))
-      .agg(count(lit(1)).as("cnt"), sum("power").as("sum_power"))
-      .withColumn("bucket", col("window.start"))
-      .drop("window")
-
-  /** [[rollupPlan]] upgraded to the FULL serving-lattice measure set — the
+    * a streaming aggregate over the FULL serving-lattice measure set — the
     * exact aggregate columns [[graft.operators.Grid.rollup1s]] materializes
     * batch-side (null-safe measure count, extrema, DECIMAL(18,2)-exact sum,
-    * [[graft.functions.PowerHist]] quantile sketch). Streaming-ingested
-    * segments written from this plan are bit-compatible with the batch
-    * lattice store: [[graft.sources.RollupTable.coarsen]] re-aggregates them
+    * [[graft.functions.PowerHist]] quantile sketch). Written by
+    * [[graft.sources.RollupTable.streamingWriter]], its segments are
+    * bit-compatible with the batch lattice store:
+    * [[graft.sources.RollupTable.coarsen]] re-aggregates them
     * (sketch bins merge by sum), percentile tiles serve from their merged
     * histograms, and every value equals the batch rollup over the same rows
     * (spec-pinned). This is the Druid ingest-time-sketch discipline

@@ -144,22 +144,18 @@ object CurationOps {
 
   /** Exploded (doc_id, s) shingle stream of a (doc_id, text) relation, with
     * the r16 shuffle-key narrowing applied (guide §2.3, the
-    * [[graft.dedup.DedupOps.shingleHashKeyOn]] trade): every consumer here
+    * [[graft.dedup.DedupOps]] live-family trade): every consumer here
     * uses the shingle ONLY as a grouping/join key — never as output — so
     * keying on `xxhash64(s)` (8 bytes vs the ~30-byte 5-gram) shrinks every
     * downstream exchange, identical results up to a 64-bit collision (the
     * oracle keeps the string form and pins equality at every test SF).
     */
-  private def shingleKeyed(docs: DataFrame): DataFrame = {
-    val ex = docs
+  private def shingleKeyed(docs: DataFrame): DataFrame =
+    docs
       .select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
       .filter(size(col("toks")) >= ShingleK)
-    if (graft.dedup.DedupOps.shingleHashKeyOn(docs.sparkSession))
-      ex.select(col("doc_id"), explode(shinglesFromToks(col("toks"))).as("s0"))
-        .select(col("doc_id"), xxhash64(col("s0")).as("s"))
-    else
-      ex.select(col("doc_id"), explode(shinglesFromToks(col("toks"))).as("s"))
-  }
+      .select(col("doc_id"), explode(shinglesFromToks(col("toks"))).as("s0"))
+      .select(col("doc_id"), xxhash64(col("s0")).as("s"))
 
   /** Per-document count of shingles shared with ANY other document — the
     * cross-doc duplication signal CCNet computes per paragraph. Shingle

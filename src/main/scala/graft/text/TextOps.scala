@@ -258,10 +258,12 @@ object TextOps {
     * non-overlapping replacement IS greedy BPE merge order, bracket
     * alignment makes a cross-symbol false match impossible, and the engines
     * agree byte-for-byte. The driver sees exactly one row per round (the
-    * argmax pair — the same scalar a single-node trainer materializes);
-    * `localCheckpoint` truncates lineage between rounds like the other
-    * iterative operators. Output: the learned merge ladder (iter, pair,
-    * merged symbol, corpus count).
+    * argmax pair — the same scalar a single-node trainer materializes).
+    * Only the starting word table ([[bpeWords0]]) is checkpointed: each
+    * round adds one narrow `replace` map on top of it, so the lineage grows
+    * linearly (k maps) and each round's argmax recomputes at most k cheap
+    * vocabulary-sized string maps. Output: the learned merge ladder (iter,
+    * pair, merged symbol, corpus count).
     */
   def bpeTrain(spark: SparkSession, sfDir: String, k: Int = BpeTrainIters): DataFrame = {
     import spark.implicits._
@@ -288,18 +290,9 @@ object TextOps {
       // pair/fused ride as literal Columns, never spliced into SQL text — a
       // corpus token containing a quote or backslash must not be able to
       // alter the expression (it is data, not syntax)
+      // no per-round checkpoint: it was one extra job per round (A/B 0.87-0.92)
       words = words
         .withColumn("s", call_function("replace", col("s"), lit(pair), lit(fused)))
-      // r17 (guide §5 driver / §2.6 fewer barrier jobs): no per-round eager
-      // localCheckpoint — it cost one extra materialization JOB per merge
-      // round (k+1 jobs of pure scheduling overhead per train, and the LAST
-      // round's words table was materialized even when only the ladder is
-      // consumed). The replace chain over the checkpointed bpeWords0 grows
-      // LINEARLY (one narrow map per round, k=6), so each round's argmax
-      // recomputes at most k cheap vocab-sized string maps — no exponential
-      // lineage, which is what the checkpoint was guarding against.
-      if (!spark.conf.get("spark.graft.bpe.nockpt", "true").toBoolean)
-        words = words.localCheckpoint()
     }
     (words, merges.result())
   }
@@ -389,14 +382,10 @@ object TextOps {
         merges += ((iter, r, p, fused.substring(1, fused.length - 1), c))
       }
       if (accepted.nonEmpty) {
+        // no per-round checkpoint, as in the sequential trainer (A/B 0.88-0.92)
         words = words.withColumn("s", accepted.foldLeft(col("s")) { case (cc, (p, _)) =>
           call_function("replace", cc, lit(p), lit(p.replace("][", "")))
         })
-        // same rationale as the sequential trainer: rounds are FIXED (3), so
-        // the accumulated replace chain is bounded and the per-round eager
-        // checkpoint job is pure overhead
-        if (!spark.conf.get("spark.graft.bpe.nockpt", "true").toBoolean)
-          words = words.localCheckpoint()
       }
     }
     (words, merges.result())
@@ -714,8 +703,8 @@ object TextOps {
     * 100 TB pipeline sketches instead of materializing the long tail), the
     * estimate is the min over a token's 4 cells, and the output ledger shows
     * `est ≥ exact` (CMS never under-counts) with the collision overestimate
-    * per top token. Everything is integer; cells broadcast back for the
-    * probe join.
+    * per top token. Everything is integer; the cell table broadcasts back
+    * as one map.
     */
   def cmsTopK(spark: SparkSession, sfDir: String, k: Int = 15): DataFrame = {
     val exact = Tables.documents(spark, sfDir) // NOT fanned (r16): A/B 1.26
@@ -726,46 +715,27 @@ object TextOps {
         % CmsWidth).as(s"c_$j")
     val withCols = exact.select(
       (col("t") +: col("exact") +: (0 until CmsRows).map(j => colAt(j, col("t")))): _*)
-    if (spark.conf.get("spark.graft.cms.onemap", "true").toBoolean) {
-      // r17 (guide §2.4 remove shuffles / §2.6 fewer barrier jobs): the 4×16
-      // cell table is ONE grouped aggregate over the (row, col, weight)
-      // triples and ONE single-row broadcast map, instead of CmsRows separate
-      // groupBy jobs each building its own broadcast relation (4 broadcast
-      // builds = 4 extra jobs; the vocab-sized final agg ran 5× under
-      // ReuseExchange). est is an in-row map lookup; cell sums are keyed
-      // (j*CmsWidth + c_j) — bit-identical to the per-row groupBys.
-      val cells = withCols
-        .select(explode(array((0 until CmsRows).map(j =>
-          struct(lit(j).as("r"), col(s"c_$j").as("c"), col("exact").as("x"))): _*)).as("e"))
-        .groupBy(col("e.r").as("r"), col("e.c").as("c"))
-        .agg(sum(col("e.x")).as("cell"))
-      val cellMap = cells.agg(
-        map_from_arrays(
-          collect_list(col("r") * CmsWidth + col("c")),
-          collect_list(col("cell"))).as("m"))
-      withCols.crossJoin(broadcast(cellMap))
-        .select(
-          col("t").as("token"), col("exact"),
-          least((0 until CmsRows).map(j =>
-            element_at(col("m"), lit(j * CmsWidth) + col(s"c_$j"))): _*).as("est"))
-        .withColumn("overcount", col("est") - col("exact"))
-        .orderBy(desc("exact"), asc("token"))
-        .limit(k)
-    } else {
-      val cells = (0 until CmsRows).map { j =>
-        withCols.groupBy(col(s"c_$j")).agg(sum("exact").as(s"cell_$j"))
-      }
-      val probed = cells.zipWithIndex.foldLeft(withCols) { case (df, (cellDf, j)) =>
-        df.join(broadcast(cellDf), s"c_$j")
-      }
-      probed
-        .select(
-          col("t").as("token"), col("exact"),
-          least((0 until CmsRows).map(j => col(s"cell_$j")): _*).as("est"))
-        .withColumn("overcount", col("est") - col("exact"))
-        .orderBy(desc("exact"), asc("token"))
-        .limit(k)
-    }
+    // one grouped aggregate over (row, col, weight) triples and one
+    // single-row broadcast map, not one groupBy + broadcast join per sketch
+    // row (A/B 0.36); cell sums keyed (j*CmsWidth + c_j), so est is an in-row
+    // map lookup
+    val cells = withCols
+      .select(explode(array((0 until CmsRows).map(j =>
+        struct(lit(j).as("r"), col(s"c_$j").as("c"), col("exact").as("x"))): _*)).as("e"))
+      .groupBy(col("e.r").as("r"), col("e.c").as("c"))
+      .agg(sum(col("e.x")).as("cell"))
+    val cellMap = cells.agg(
+      map_from_arrays(
+        collect_list(col("r") * CmsWidth + col("c")),
+        collect_list(col("cell"))).as("m"))
+    withCols.crossJoin(broadcast(cellMap))
+      .select(
+        col("t").as("token"), col("exact"),
+        least((0 until CmsRows).map(j =>
+          element_at(col("m"), lit(j * CmsWidth) + col(s"c_$j"))): _*).as("est"))
+      .withColumn("overcount", col("est") - col("exact"))
+      .orderBy(desc("exact"), asc("token"))
+      .limit(k)
   }
 
   def cmsTopKSql(k: Int = 15): String = {

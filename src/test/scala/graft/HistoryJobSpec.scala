@@ -2,13 +2,14 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.{HistoryJob, RollupStreamJob, StreamingDutyCycle}
+import graft.sources.RollupTable
+import graft.streaming.{HistoryJob, StreamingDutyCycle}
 
 class HistoryJobSpec extends AnyFunSuite with SharedSpark {
 
   test("streaming rollup job maintains the partitioned table incrementally") {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.streaming.Trigger
     val src = java.nio.file.Files.createTempDirectory("rsj_src").toString
     val table = java.nio.file.Files.createTempDirectory("rsj_tbl").toString
     val ckpt = java.nio.file.Files.createTempDirectory("rsj_ckpt").toString
@@ -17,25 +18,29 @@ class HistoryJobSpec extends AnyFunSuite with SharedSpark {
     spark.createDataset(Seq(rd(10, 1.0), rd(10, 2.0), rd(11, 3.0), rd(5000, 0.0)))
       .toDF().write.mode("append").parquet(src)
     val schema = spark.read.parquet(src).schema
-    val q = RollupStreamJob.start(
-      spark.readStream.schema(schema).parquet(src), table, ckpt)
-    q.awaitTermination(60000)
+    def run(): Unit = RollupTable
+      .streamingWriter(
+        StreamingDutyCycle.rollupPlanFull(spark.readStream.schema(schema).parquet(src)),
+        table, ckpt)
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination(60000)
+    run()
     // second increment: new data closes more buckets; restart resumes
     spark.createDataset(Seq(rd(5001, 7.0), rd(9999, 0.0)))
       .toDF().write.mode("append").parquet(src)
-    val q2 = RollupStreamJob.start(
-      spark.readStream.schema(schema).parquet(src), table, ckpt)
-    q2.awaitTermination(60000)
-    val out = spark.read.parquet(table)
-      .select("epoch_s", "cnt", "sum_power").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .toSet
-    assert(out.contains((10L, 2L, 3.0)))
-    assert(out.contains((11L, 1L, 3.0)))
-    assert(out.contains((5001L, 1L, 7.0)))
-    // partition layout present
-    val dates = new java.io.File(table).listFiles().map(_.getName).filter(_.startsWith("date="))
-    assert(dates.nonEmpty)
+    run()
+    val out = RollupTable.readSegments(spark, table)
+      .select("epoch_s", "cnt", "sum_power_dec").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDecimal(2).doubleValue))
+      .toSeq
+    // each closed bucket lands once across the restart
+    Seq((10L, 2L, 3.0), (11L, 1L, 3.0), (5001L, 1L, 7.0)).foreach { b =>
+      assert(out.count(_ == b) == 1, s"bucket $b in $out")
+    }
+    // (date, hour) layout inside the segments
+    val segs = new java.io.File(table).listFiles().filter(_.getName.startsWith("batch="))
+    assert(segs.exists(_.list().exists(_.startsWith("date="))))
   }
 
   test("history run emits keyed JSON with the reference's field order and injected clock") {

@@ -153,14 +153,17 @@ class RelationalSpec extends AnyFunSuite with SharedSpark {
 
 
   test("star join pre-aggregated form equals the join-then-aggregate form (r17)") {
-    def rows(preagg: Boolean) = {
-      val prev = spark.conf.getOption("spark.graft.starjoin.preagg")
-      spark.conf.set("spark.graft.starjoin.preagg", preagg.toString)
+    // the size gate reads Spark's estimate, file bytes × fileCompressionFactor:
+    // a huge factor keeps orders from broadcasting, which selects the
+    // pre-aggregated shape (PlanShapeSpec pins the shape itself)
+    def rows(compressionFactor: String) = {
+      val key = "spark.sql.sources.fileCompressionFactor"
+      val prev = spark.conf.getOption(key)
+      spark.conf.set(key, compressionFactor)
       try Relational.starJoin(spark, sfDir).collect().map(_.toSeq).toSeq
-      finally prev.fold(spark.conf.unset("spark.graft.starjoin.preagg"))(
-        spark.conf.set("spark.graft.starjoin.preagg", _))
+      finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
     }
-    assert(rows(preagg = true) == rows(preagg = false))
+    assert(rows("100000") == rows("1.0"))
   }
 
 }

@@ -602,32 +602,6 @@ class TextAndMediaSpec extends AnyFunSuite with SharedSpark {
     assert(e.getMessage.contains("degenerate corpus"), e.getMessage)
   }
 
-  /** Flip a plan-time graft conf around a block, restoring the prior value. */
-  private def withConf[A](key: String, value: String)(body: => A): A = {
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body
-    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
-
-  test("cms one-map cell aggregation equals the per-row groupBy form (r17)") {
-    def rows(on: Boolean) = withConf("spark.graft.cms.onemap", on.toString) {
-      TextOps.cmsTopK(spark, sfDir).collect().map(_.toSeq).toSeq
-    }
-    assert(rows(on = true) == rows(on = false))
-  }
-
-  test("bpe trainer without per-round checkpoints learns the identical ladder (r17)") {
-    def ladder(nockpt: Boolean) = withConf("spark.graft.bpe.nockpt", nockpt.toString) {
-      TextOps.bpeTrain(spark, sfDir).collect().map(_.toSeq).toSeq
-    }
-    assert(ladder(nockpt = true) == ladder(nockpt = false))
-    def encoded(nockpt: Boolean) = withConf("spark.graft.bpe.nockpt", nockpt.toString) {
-      TextOps.bpeEncode(spark, sfDir).collect().map(_.toSeq).toSeq
-    }
-    assert(encoded(nockpt = true) == encoded(nockpt = false))
-  }
-
   test("negative sampling emits only ids of documents that exist (sparse id space)") {
     // doc ids with gaps: hash % count lands on nonexistent ids, which the
     // join-back must reject (r7 emitted them as phantom negatives)
