@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 /** Developer-side interleaved A/B for a plan-time boolean conf: alternates the
   * `CONF` key on/off within ONE session (the conf is read at plan time),
   * timing each named query once per mode
@@ -26,7 +28,7 @@ object AbFanout {
     Tables.tune(spark)
     try {
       Tables.AllTables.foreach(t => Tables.read(spark, sfDir, t).count())
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
     val names = args.toSeq
     val acc = scala.collection.mutable.Map
       .empty[(String, Boolean), List[Double]].withDefaultValue(Nil)
@@ -36,7 +38,7 @@ object AbFanout {
       try {
         SparkEntry.queries(name)(spark, sfDir).count()
         acc((name, fan)) ::= (System.nanoTime() - t0) / 1e9
-      } catch { case t: Throwable =>
+      } catch { case NonFatal(t) =>
         System.err.println(s"[ab] $name fan=$fan FAILED: $t") }
     }
     names.foreach { n =>

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import scala.util.control.NonFatal
+
 /** Benchmark main: runs every declared query on SPARK_GRAFT_SF_DIR and prints
   * one JSON line. A warm-up pass (table footers + a small shuffle/join) runs
   * first so the first timed query doesn't absorb JVM/codegen/session
@@ -55,7 +57,7 @@ object Bench {
       val o = Tables.orders(spark, sfDir).groupBy("o_custkey").count()
       Tables.customer(spark, sfDir)
         .join(o, col("c_custkey") === col("o_custkey"), "left").count()
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
 
     // Contention self-identification (VERDICT r5 #5): the driver's bench can
     // land on a contended box, producing phantom regressions that waste a
@@ -94,7 +96,7 @@ object Bench {
       def once(): Double = {
         val t0 = System.nanoTime()
         try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
-        catch { case t: Throwable => errors(name) = jsonErr(t); -1.0 }
+        catch { case NonFatal(t) => errors(name) = jsonErr(t); -1.0 }
       }
       val a = once(); val b = once()
       name -> (if (a < 0 || b < 0) -1.0 else math.min(a, b))
@@ -114,7 +116,7 @@ object Bench {
       def once(): Double = {
         val t0 = System.nanoTime()
         try { fn(spark, dir).count(); (System.nanoTime() - t0) / 1e9 }
-        catch { case _: Throwable => -1.0 }
+        catch { case NonFatal(_) => -1.0 }
       }
       val (a, b) = (once(), once())
       if (a < 0 || b < 0) -1.0 else math.min(a, b)
@@ -137,7 +139,7 @@ object Bench {
       def once(): Double = {
         val t0 = System.nanoTime()
         try { fn(spark, dir).count(); (System.nanoTime() - t0) / 1e9 }
-        catch { case _: Throwable => -1.0 }
+        catch { case NonFatal(_) => -1.0 }
       }
       Seq(once(), once())
     }
@@ -485,7 +487,7 @@ object Bench {
           s""""radc_candidate_scan_bytes":$radcB,""" +
           s""""adc_bytes_vs_float":${if (flB > 0) adcB.toDouble / flB else -1.0},""" +
           s""""radc_bytes_vs_float":${if (flB > 0) radcB.toDouble / flB else -1.0}}"""
-      } catch { case t: Throwable => s""","ivf_index_scale":{"error":"${jsonErr(t)}"}""" }
+      } catch { case NonFatal(t) => s""","ivf_index_scale":{"error":"${jsonErr(t)}"}""" }
       cleanup(probeDir)
       val rows = uniformRows :+ twoSided :+ imageFixedBands :+ imageWideBands
       val worst = uniformRows.map(_._1).filterNot(_ < 0).foldLeft(0.0)(math.max)
@@ -494,7 +496,7 @@ object Bench {
       (s""","scale_probe":{"factor":$factor,"queries":${rows.map(_._2).mkString("{", ",", "}")}}""" +
         ivfIndexScale,
         worst, twoSidedPerUnit, worstAttrib(uniformRows), worstName(uniformRows))
-    } catch { case t: Throwable =>
+    } catch { case NonFatal(t) =>
       (s""","scale_probe":{"error":"${jsonErr(t)}"}""", -1.0, -1.0, "null", "null") }
 
     // Planted-SKEW probe (VERDICT r3 #2): the uniform replication above keeps
@@ -649,7 +651,7 @@ object Bench {
               s""""n_over_cells_at_timed_threshold":${ledTimed.length},""" +
               s""""clamp_engaged_in_timed_plan":${ledTimed.nonEmpty},""" +
               s""""ledger_sec":$ledgerSec}"""
-          } catch { case t: Throwable =>
+          } catch { case NonFatal(t) =>
             s""","clamp_ledger":{"error":"${jsonErr(t)}"}""" }
           probeRowVs(
             "q_knn_graph_megacell", knnClean10x, embHotDir,
@@ -657,7 +659,7 @@ object Bench {
             extra = s""","hot_vec_frac":0.3,"corpus_factor":$factor,"base_is_clean_10x":true$clampExtra""",
             fresh = Some((SparkEntry.queries("q_knn_graph"), embCleanDir)))
         } finally { cleanup(embCleanDir); cleanup(embHotDir) }
-      } catch { case t: Throwable =>
+      } catch { case NonFatal(t) =>
         (-1.0, s""""q_knn_graph_megacell":{"error":"${jsonErr(t)}"}""",
           s"""{"query":"q_knn_graph_megacell","ratio":-1.0}""")
       }
@@ -666,7 +668,7 @@ object Bench {
       val worst = rows.map(_._1).filterNot(_ < 0).foldLeft(0.0)(math.max)
       (s""","scale_probe_skew":{"factor":$factor,"hot_doc_frac":0.3,"hot_event_frac":0.5,"hot_lineitem_frac":0.5,"queries":${rows.map(_._2).mkString("{", ",", "}")}}""",
         worst, worstAttrib(rows), worstName(rows))
-    } catch { case t: Throwable =>
+    } catch { case NonFatal(t) =>
       (s""","scale_probe_skew":{"error":"${jsonErr(t)}"}""", -1.0, "null", "null") }
 
     // Rollup-serving demonstration: the same sliding-window counts, once over
@@ -764,7 +766,7 @@ object Bench {
         s"""${leg("window_120s_60s_via_60s", rawMinuteSec, servedMinuteSec)},""" +
         s"""${leg("duty_tile_via_cnt_duty", rawDutySec, servedDutySec)},""" +
         s"""${leg("duty_tile_60s_via_lattice", rawDutyMinSec, servedDutyMinSec)}}"""
-    } catch { case t: Throwable => s""","rollup_serving":{"error":"${jsonErr(t)}"}""" }
+    } catch { case NonFatal(t) => s""","rollup_serving":{"error":"${jsonErr(t)}"}""" }
 
     // Index-serving demonstration: per-batch cost against the durable LSH /
     // IVF indexes vs the naive one-shot recompute a pipeline without an
@@ -870,7 +872,7 @@ object Bench {
           s""""growk_probe_rows_before":$gkProbeRowsBefore,""" +
           s""""growk_probe_rows_after":$gkProbeRowsAfter,""" +
           s""""growk_probe_sec_before":$gkProbeBefore,"growk_probe_sec_after":$gkProbeAfter"""
-      } catch { case t: Throwable => s""""growk_error":"${jsonErr(t)}"""" }
+      } catch { case NonFatal(t) => s""""growk_error":"${jsonErr(t)}"""" }
       // AUTOMATIC grow-K policy leg (VERDICT r13 #2): the same 10× corpus
       // arrives as a STREAM in 4 batches, twice — once with the in-stream
       // cellBudget policy wired, once without. The policy feed's budget
@@ -938,7 +940,7 @@ object Bench {
           s""""policy_off_candidate_rows":$offCand,"policy_on_candidate_rows":$onCand,""" +
           s""""probe_recovery":${if (onProbe > 0) offProbe / onProbe else -1.0},""" +
           s""""maintenance_ledger":$onLedger}"""
-      } catch { case t: Throwable =>
+      } catch { case NonFatal(t) =>
         s""","auto_growk_stream":{"error":"${jsonErr(t)}"}""" }
       // hamming fingerprint index: one-shot = rehash + all-band self-join of
       // the whole image corpus; probe = a 2% batch against the stored bands
@@ -1038,7 +1040,7 @@ object Bench {
         s""""fp_occupancy_skew":$fpSkew,""" +
         s""""fp_occupancy_cap":$fpCap,"fp_over_cap_buckets":${fpLed.length},""" +
         s""""fp_suppressed_candidate_pairs":$fpSuppressed}""" + autoGrowkJson
-    } catch { case t: Throwable => s""","index_serving":{"error":"${jsonErr(t)}"}""" }
+    } catch { case NonFatal(t) => s""","index_serving":{"error":"${jsonErr(t)}"}""" }
 
     // Shingle-store rebuild governance (VERDICT r14 #2 + #3): the COMPOSED
     // two-tier admission pipeline over the real corpus. 90% of documents
@@ -1155,7 +1157,7 @@ object Bench {
         s""""stale_surplus_pairs":${exactPairs - fixpointPairs},""" +
         s""""lsh_tier_pairs":$lshTierPairs,""" +
         s""""ledger":$ledgerJson}"""
-    } catch { case t: Throwable =>
+    } catch { case NonFatal(t) =>
       s""","shingle_governance":{"error":"${jsonErr(t)}"}""" }
 
     // PairStore streaming absorb under skew (VERDICT r8 #8): micro-batch
@@ -1209,7 +1211,7 @@ object Bench {
         s""""hot_slowdown":${if (hotRps > 0) uniRps / hotRps else -1.0},""" +
         s""""refresh_sec_uniform":$uniRefresh,"refresh_sec_hot":$hotRefresh,""" +
         s""""refresh_hot_ratio":${if (uniRefresh > 0) hotRefresh / uniRefresh else -1.0}}"""
-    } catch { case t: Throwable => s""","pairstore_streaming":{"error":"${jsonErr(t)}"}""" }
+    } catch { case NonFatal(t) => s""","pairstore_streaming":{"error":"${jsonErr(t)}"}""" }
 
     // Long-document probe (VERDICT r8 #2): per-row lambda costs are
     // invisible at the corpus's ~54 tokens/doc — plant 200 docs × 2k and
@@ -1250,7 +1252,7 @@ object Bench {
       s""","long_doc_probe":{"docs":200,"tokens_short":2000,"tokens_long":10000,""" +
         s""""gopher_sec_short":$sShort,"gopher_sec_long":$sLong,""" +
         s""""sec_per_token_ratio":$perTok}"""
-    } catch { case t: Throwable => s""","long_doc_probe":{"error":"${jsonErr(t)}"}""" }
+    } catch { case NonFatal(t) => s""","long_doc_probe":{"error":"${jsonErr(t)}"}""" }
 
     // Streaming throughput vs BASELINE.md's one published number (≥100k
     // msg/s sustained ingest): run the duty-cycle streaming plan over a 1M-row
@@ -1409,7 +1411,7 @@ object Bench {
           s""""input_rows":$n,"baseline_rows_per_sec":100000}""",
           math.max(rps, rpsPre))
       } finally { cleanup(dir); cleanup(hotDir) }
-    } catch { case t: Throwable => (s""","streaming":{"error":"${jsonErr(t)}"}""", -1L) }
+    } catch { case NonFatal(t) => (s""","streaming":{"error":"${jsonErr(t)}"}""", -1L) }
 
     // end-of-run contention sample: drift vs the start sample flags a run
     // that degraded mid-flight (another tenant landed on the box)
@@ -1477,7 +1479,7 @@ object Bench {
       for (p <- Seq("/tmp/bench_last.json", s"/tmp/bench_last_c$cpus.json"))
         java.nio.file.Files.write(java.nio.file.Paths.get(p), fullJson.getBytes("UTF-8"))
       println(s"""{"bench_json_file":"/tmp/bench_last.json","bench_json_file_leg":"/tmp/bench_last_c$cpus.json"}""")
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
     println(stdoutLine)
     spark.stop()
   }

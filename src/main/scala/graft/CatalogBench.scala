@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 /** Builder-side catalog-only bench: exactly [[Bench]]'s warmup + min-of-two
   * per-query timing over the full declared catalog, WITHOUT the probe /
   * streaming / governance sections — the fast inner loop for optimization
@@ -31,14 +33,14 @@ object CatalogBench {
       val o = Tables.orders(spark, sfDir).groupBy("o_custkey").count()
       Tables.customer(spark, sfDir)
         .join(o, col("c_custkey") === col("o_custkey"), "left").count()
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .map { case (name, fn) =>
         def once(): Double = {
           val t0 = System.nanoTime()
           try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
-          catch { case t: Throwable =>
+          catch { case NonFatal(t) =>
             System.err.println(s"[catbench] $name FAILED: $t"); -1.0 }
         }
         val a = once(); val b = once()

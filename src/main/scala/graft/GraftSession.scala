@@ -1,33 +1,51 @@
 package graft
 
+import org.apache.spark.{SparkConf, SparkContext}
 import org.apache.spark.sql.SparkSession
 
 /** SparkSession factory for the graft engine.
   *
-  * local[32] mirrors the dev box; on a real cluster the same builder is used
-  * minus `.master`, and the shuffle-partition count is raised to ~2-3x the
-  * total executor cores (or left to AQE's coalescing with a high initial
-  * value). Nothing in the engine assumes single-JVM execution.
+  * The master defaults to `local[SPARK_GRAFT_CPUS]`; on a real cluster the
+  * same factory is used with that cluster's master. Every session it returns
+  * runs `spark.sql.shuffle.partitions` = the core count of its context
+  * (Spark's `defaultParallelism`, so `local[N]` gives N), and children made
+  * with `newSession()` inherit it. Batch queries would tolerate a larger
+  * count — AQE coalesces their shuffle partitions at run time — but
+  * stateful streams cannot: Spark disables AQE for stateful workloads, so
+  * the duty-cycle and rollup streams run one state-store task per partition
+  * on every trigger, each committing its own delta and checksum files
+  * whether or not the trigger read any rows. The checkpoint's offset log
+  * then fixes the count for the life of the query, so it must be right when
+  * the query first starts. Nothing in the engine assumes single-JVM
+  * execution.
   */
 object GraftSession {
+
+  /** The session over this JVM's context, started on `master` if none runs
+    * yet. A context that already runs keeps its own cores, and so its own
+    * shuffle-partition count: `master` only matters on first start.
+    */
   def create(
       appName: String = "graft",
-      master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
-      shufflePartitions: Int = 32): SparkSession = {
-    val spark = SparkSession
-      .builder()
-      .master(master)
-      .appName(appName)
+      master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"): SparkSession = {
+    val conf = new SparkConf()
+      .setMaster(master)
+      .setAppName(appName)
       // the engine's own surface (dot_arrays, rollup routing) arrives the
       // way any Spark library's does: through SparkSessionExtensions. A
       // cluster deployment passes the same conf to spark-submit.
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
+      .set("spark.sql.extensions", "graft.GraftExtensions")
+      .set("spark.sql.session.timeZone", "UTC")
+      .set("spark.ui.enabled", "false")
+      .set("spark.sql.adaptive.enabled", "true")
+    val sc = SparkContext.getOrCreate(conf)
+    // a builder option, not a conf set afterwards: newSession() children
+    // start from the builder options of the session that made the context
+    val spark = SparkSession.builder()
+      .config(conf)
+      .config("spark.sql.shuffle.partitions", sc.defaultParallelism.toLong)
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    sc.setLogLevel("WARN")
     Tables.tune(spark)
   }
 

@@ -8,9 +8,10 @@ import scala.util.control.NonFatal
 
 /** Loaders for the driver-generated TESTDATA tables plus session tuning.
   *
-  * All runtime-settable confs are (re)applied on every load so the queries
-  * behave identically whether the session was built by [[GraftSession]], the
-  * driver's `Verify`/`Bench` mains, or a test suite.
+  * [[tune]] runs once per session: [[GraftSession]] applies it to every
+  * session it makes, and each main applies it to the session it builds. The
+  * loaders never re-apply it, so a conf a caller sets on a tuned session
+  * (a broadcast threshold, an AQE switch) holds for the queries it builds.
   */
 object Tables {
 
@@ -32,10 +33,8 @@ object Tables {
     spark
   }
 
-  def read(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    tune(spark)
+  def read(spark: SparkSession, sfDir: String, name: String): DataFrame =
     spark.read.parquet(s"$sfDir/$name.parquet")
-  }
 
   // TPC-H-ish star schema
   def region(s: SparkSession, d: String): DataFrame   = read(s, d, "region")

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import scala.util.control.NonFatal
+
 import graft.Tables
 
 /** Builder-side per-stage attribution for the IVF/ADC serving family
@@ -30,7 +32,7 @@ object AdcProfile {
     Tables.tune(spark)
     graft.functions.VectorFunctions.register(spark)
     Tables.AllTables.foreach(t => try Tables.read(spark, sfDir, t).count()
-      catch { case _: Throwable => () })
+      catch { case NonFatal(_) => () })
 
     import SimilarityOps._
     val nQueries = 10

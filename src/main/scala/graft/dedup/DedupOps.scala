@@ -125,7 +125,8 @@ object DedupOps {
     * r4 #1). The grouped sum partial-aggregates map-side (one bounded scalar
     * per key per partition — never a per-shingle id list), hot keys vanish
     * at the join (the df side is pre-filtered to df ≤ cap), and the join
-    * itself is AQE skew-splittable while the hot postings drain. The
+    * itself is AQE skew-splittable while the hot postings drain (see
+    * [[joinPerShingle]] for the key that makes it so). The
     * downstream posting grouping ([[pairStats]]) reuses the join's
     * s-distribution — same discipline as
     * [[graft.text.CurationOps.sharedShingles]], measured 28% faster under a
@@ -170,8 +171,28 @@ object DedupOps {
     val wDoc = org.apache.spark.sql.expressions.Window.partitionBy("doc_id")
     val perDoc = shingleOccurrencesOf(docs, key)
     val dfRel = perDoc.groupBy("s").agg(sum("c").as("df")).filter(col("df") <= cap)
-    perDoc.join(dfRel, "s")
+    joinPerShingle(perDoc, dfRel)
       .withColumn("n_shingles", sum("c").over(wDoc))
+  }
+
+  /** `rows` inner-joined back to a per-shingle aggregate `perKey` of the
+    * same relation, keyed on (s, xxhash64(s)) rather than on s alone: the
+    * redundant key is what keeps a hot shingle splittable. Joined on s
+    * alone, a shuffle join reuses the aggregate's s-partitioning, so the
+    * aggregate's final operator sits between its exchange and the join, and
+    * AQE's OptimizeSkewedJoin (which needs a bare shuffle stage on BOTH
+    * sides) leaves the hot key's partition whole: every posting of it
+    * funnels through one task. The (s, hash) key needs its own exchange on
+    * the aggregate side too, so the hot partition splits. Meant for a
+    * df-capped `perKey`: that side is small and usually broadcasts, and the
+    * extra key then costs one hash per row (q_ngram_jaccard_pairs and
+    * q_jaccard_capped read flat at sf0.1); over an unfiltered,
+    * vocabulary-sized aggregate the extra exchange costs more (see
+    * [[graft.text.CurationOps.sharedShingles]]).
+    */
+  private def joinPerShingle(rows: DataFrame, perKey: DataFrame): DataFrame = {
+    def hashed(df: DataFrame) = df.withColumn("s_hash", xxhash64(col("s")))
+    hashed(rows).join(hashed(perKey), Seq("s", "s_hash")).drop("s_hash")
   }
 
   /** Per-(doc, shingle) occurrence groups of a (doc_id, text) relation —
@@ -748,7 +769,7 @@ object DedupOps {
       .select(col("doc_id"), xxhash64(col("s0")).as("s"))
     val perDoc = exploded.groupBy("doc_id", "s").agg(count(lit(1)).as("c"))
     val dfRel = perDoc.groupBy("s").agg(sum("c").as("df")).filter(col("df") <= cap)
-    val coldDocs = perDoc.join(dfRel, "s")
+    val coldDocs = joinPerShingle(perDoc, dfRel)
       .withColumn("n_shingles", sum("c").over(wDoc))
     pairStats(coldDocs)
       .withColumn("jaccard", col("inter") / (col("n_a") + col("n_b") - col("inter")))

@@ -25,7 +25,6 @@ object Ingest {
 
   /** REDD channel scan (S3) + label enrichment (S4/J1). */
   def loadRedd(spark: SparkSession, rootDir: String, batchNum: Int = 1): DataFrame = {
-    graft.Tables.tune(spark)
     val readings = spark.read
       .option("sep", " ")
       .schema(StructType(Seq(
@@ -61,7 +60,6 @@ object Ingest {
     * named "unknown", zero-byte files skipped (they produce no rows).
     */
   def loadGreend(spark: SparkSession, rootDir: String, batchNum: Int = 1): DataFrame = {
-    graft.Tables.tune(spark)
     // building dirs can have different appliance counts — load each dir
     // (driver-side listing of a handful of dirs; file reading itself is
     // distributed) and union the normalized long forms.
@@ -129,7 +127,6 @@ object Ingest {
     * never poison inference.
     */
   def loadJsonlCorpus(spark: SparkSession, glob: String): (DataFrame, DataFrame) = {
-    graft.Tables.tune(spark)
     val raw = spark.read
       .schema(JsonlCorpusSchema)
       .option("mode", "PERMISSIVE")

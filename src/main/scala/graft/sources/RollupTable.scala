@@ -1,8 +1,10 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
+
+import scala.util.control.NonFatal
 
 import graft.operators.Grid
 
@@ -196,7 +198,9 @@ object RollupTable {
     // must fail FAST: a mixed store would read the absent
     // additive columns as NULL in old segments and silently undercount
     // every tile served from them. Checked once per store per JVM (the
-    // first micro-batch), not per trigger.
+    // first micro-batch), not per trigger. Only a store that does not exist
+    // yet (no path, or no files to infer a schema from) skips the check; an
+    // unreadable one fails the batch.
     val storeKey = outPath + "|" + batch.columns.sorted.mkString(",")
     if (checkedSegmentStores.add(storeKey)) {
       try {
@@ -211,8 +215,8 @@ object RollupTable {
               "store under-counts absent additive measures; write to a new path " +
               "or migrate the store offline")
       } catch {
-        case e: IllegalStateException => checkedSegmentStores.remove(storeKey); throw e
-        case _: Exception => () // no store yet — this batch creates it
+        case e: AnalysisException if NoStoreYet(e.getCondition) => () // this batch creates it
+        case NonFatal(e) => checkedSegmentStores.remove(storeKey); throw e
       }
     }
     batch
@@ -222,6 +226,8 @@ object RollupTable {
       .partitionBy("date", "hour")
       .parquet(s"$outPath/batch=$batchId")
   }
+
+  private val NoStoreYet = Set("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
 
   private val checkedSegmentStores =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()

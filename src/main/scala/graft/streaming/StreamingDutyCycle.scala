@@ -15,8 +15,12 @@ import org.apache.spark.sql.functions._
   * tests drive it from `MemoryStream[PowerReading]`. Micro-batch execution
   * plans partial aggregation before the state-store shuffle, so at cluster
   * scale each trigger shuffles one row per (window × appliance) per input
-  * partition — not raw readings. State is bounded by the watermark (T1);
-  * with RocksDB state store this holds at 10k+ appliances × 5 live windows.
+  * partition — not raw readings. State is bounded by the watermark (T1).
+  * The engine sets no state-store provider, so queries run on Spark's
+  * default HDFS-backed store (state in executor memory, delta files in the
+  * checkpoint); a deployment that needs bounded memory at 10k+ appliances ×
+  * 5 live windows sets `spark.sql.streaming.stateStore.providerClass` to
+  * RocksDB, and ScaleSpec/RecoverySpec run the same plans on it.
   */
 object StreamingDutyCycle {
 
@@ -161,8 +165,7 @@ object StreamingDutyCycle {
     * sketch is built ONCE at ingest, inside the same watermarked stateful
     * aggregation as the additive measures — never a post-hoc raw re-scan.
     * State per open (second × appliance) group is the bounded histogram map
-    * plus five scalars, so RocksDB state size scales with active keys, not
-    * rows.
+    * plus five scalars, so state size scales with active keys, not rows.
     */
   def rollupPlanFull(readings: DataFrame, watermarkSec: Int = 2): DataFrame =
     readings

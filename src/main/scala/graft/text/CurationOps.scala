@@ -171,10 +171,13 @@ object CurationOps {
     // occurrence stream is compressed to (doc_id, s, c) FIRST — a doc's
     // shingles sit in one input partition, so within-doc repeats collapse in
     // the map-side partial agg and the df computation plus the join back
-    // both run over the compressed relation (the join stays AQE
-    // skew-splittable on a hot shingle). Measured vs the uncompressed
+    // both run over the compressed relation. Measured vs the uncompressed
     // two-scan form at sf0.1: 1.7 s vs 1.9 s base, 8.1 s vs 11.3 s with a
-    // planted hot shingle in 30% of a 10× corpus.
+    // planted hot shingle in 30% of a 10× corpus. The join is on s alone, so
+    // as a shuffle join AQE cannot split a hot shingle's partition (see
+    // [[graft.dedup.DedupOps.joinPerShingle]]); the (s, hash) key that would
+    // let it costs an exchange of this unfiltered, vocabulary-sized df side,
+    // measured 1.36-1.38 s → 1.67-1.83 s at sf0.1 on 4 cores, so it stays.
     val perDoc = shingleKeyed(Tables.documentsDerive(spark, sfDir))
       .groupBy(col("doc_id"), col("s"))
       .agg(count(lit(1)).as("c"))

@@ -1,11 +1,13 @@
 package graft
 
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.dedup.DedupOps
 
-class DedupSpec extends AnyFunSuite with SharedSpark {
+class DedupSpec extends AnyFunSuite with SharedSpark with AdaptiveSparkPlanHelper {
 
   // TESTDATA plants near-duplicates: a doc whose text is another doc's text
   // with " dup" token noise appended. Recover the expected pairs directly.
@@ -307,6 +309,7 @@ class DedupSpec extends AnyFunSuite with SharedSpark {
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val conf = spark.conf
     val saved = Seq(
+      "spark.sql.shuffle.partitions",
       "spark.sql.autoBroadcastJoinThreshold",
       "spark.sql.adaptive.autoBroadcastJoinThreshold",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes",
@@ -339,8 +342,21 @@ class DedupSpec extends AnyFunSuite with SharedSpark {
       conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", "4096")
       conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2.0")
       conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "8192")
+      // and many partitions per hot key, as on a cluster: AQE judges skew in
+      // BYTES, and the hot postings compress ~4x better than the uniform
+      // ones, so over the suite's 16 partitions the hot one is only ~1.6x
+      // the median and is (rightly) not split
+      conf.set("spark.sql.shuffle.partitions", "64")
       spark.sparkContext.addSparkListener(listener)
-      val pairs = DedupOps.ngramJaccardPairs(spark, dir).collect()
+      // the thresholds above reach the planner: the df join-back is planned
+      // as a shuffle join, never a broadcast (read before execution — on this
+      // empty result AQE's final plan prunes the join away)
+      val pairsDf = DedupOps.ngramJaccardPairs(spark, dir)
+      val plan = pairsDf.queryExecution.executedPlan
+      val joins = collectWithSubqueries(plan) { case j: BaseJoinExec => j }
+      assert(joins.nonEmpty && joins.forall(_.isInstanceOf[SortMergeJoinExec]),
+        s"expected only sort-merge joins:\n$plan")
+      val pairs = pairsDf.collect()
       // correctness unchanged: no planted near-dups here, and the hot shingle
       // is over the cap, so no pair may surface from it
       assert(pairs.isEmpty, s"unexpected pairs from the hot-shingle corpus: ${pairs.take(3).toSeq}")

@@ -178,8 +178,6 @@ class ScaleSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("runtime bloom filter prunes the probe side of a selective shuffle join") {
-    // load FIRST: Tables.read re-applies tune(), which would reset the
-    // broadcast threshold set below (plan-time conf is what the rule reads)
     val o = Tables.orders(spark, sfDir).filter(col("o_custkey") === 7)
     val l = Tables.lineitem(spark, sfDir)
     val prevB = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")

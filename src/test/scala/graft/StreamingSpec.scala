@@ -125,6 +125,30 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
       "the two plan shapes must be distinguishable for this spec to mean anything")
   }
 
+  test("stateful streams run one shuffle partition per core, in child sessions too") {
+    // AQE cannot coalesce a stateful stream's partitions, so every trigger
+    // pays one state-store commit per partition; GraftSession sizes them to
+    // the context's cores. The suite's local[16] context is already running,
+    // so create() must return a session on it without resetting the count.
+    def stateParts(s: org.apache.spark.sql.SparkSession, name: String): Int = {
+      implicit val sqlCtx = s.sqlContext
+      import s.implicits._
+      val input = MemoryStream[PowerReading]
+      val query = StreamingDutyCycle.planAuto(input.toDF())
+        .writeStream.format("memory").queryName(name)
+        .outputMode(OutputMode.Append).start()
+      try {
+        input.addData(reading(100, 10.0))
+        query.processAllAvailable()
+        query.lastProgress.stateOperators.head.numShufflePartitions.toInt
+      } finally query.stop()
+    }
+    val cores = spark.sparkContext.defaultParallelism
+    val root = GraftSession.create()
+    assert(stateParts(root, "parts_root") == cores)
+    assert(stateParts(root.newSession(), "parts_child") == cores)
+  }
+
   test("late data beyond the watermark is dropped from closed windows") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
@@ -649,4 +673,30 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
     assert(ex.getMessage.contains("mixed") || ex.getMessage.contains("measure set"))
   }
 
+  test("an unreadable segment store fails the batch instead of skipping the mixed-store guard") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    import java.nio.file.Files
+    val outDir = Files.createTempDirectory("segcorrupt_out")
+    val corruptSeg = outDir.resolve("batch=0")
+    val part = corruptSeg.resolve("date=1970-01-01/hour=0/part-00000.parquet")
+    Files.createDirectories(part.getParent)
+    Files.write(part, "not a parquet file".getBytes)
+    val batch = StreamingDutyCycle.rollupPlanFull(Seq(reading(10, 1.0), reading(11, 2.0)).toDF())
+    val ex = intercept[org.apache.spark.SparkException] {
+      graft.sources.RollupTable.writeSegment(batch, outDir.toString, 1L)
+    }
+    assert(!Files.exists(outDir.resolve("batch=1")),
+      s"the batch must not land past an unreadable store: $ex")
+    // the failed check is not remembered as passed: with the corrupt
+    // segment gone the store is empty (no schema to infer), so the same
+    // batch now creates it — as it does under a path that does not exist
+    new scala.reflect.io.Directory(corruptSeg.toFile).deleteRecursively()
+    val fresh = Files.createTempDirectory("segfresh_out").resolve("store").toString
+    graft.sources.RollupTable.writeSegment(batch, outDir.toString, 1L)
+    graft.sources.RollupTable.writeSegment(batch, fresh, 1L)
+    Seq(outDir.toString, fresh).foreach { p =>
+      assert(graft.sources.RollupTable.readSegments(spark, p).count() == 2L, p)
+    }
+  }
 }
