@@ -16,19 +16,9 @@ object AbFanout {
     val confKey = sys.env.getOrElse("CONF",
       sys.error("CONF is required: the plan-time boolean conf key to flip on/off"))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val rounds = sys.env.getOrElse("ROUNDS", "3").toInt
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.tune(spark)
-    try {
-      Tables.AllTables.foreach(t => Tables.read(spark, sfDir, t).count())
-    } catch { case NonFatal(_) => () }
+    val spark = GraftSession.create("graft-abfanout")
+    CatalogBench.warmUp(spark, sfDir)
     val names = args.toSeq
     val acc = scala.collection.mutable.Map
       .empty[(String, Boolean), List[Double]].withDefaultValue(Nil)

@@ -38,26 +38,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.tune(spark)
-
-    // Warm-up: touch every table and exercise scan→shuffle→join→agg codegen.
-    try {
-      import org.apache.spark.sql.functions._
-      val tables = Seq("region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings")
-      tables.foreach(t => Tables.read(spark, sfDir, t).count())
-      val o = Tables.orders(spark, sfDir).groupBy("o_custkey").count()
-      Tables.customer(spark, sfDir)
-        .join(o, col("c_custkey") === col("o_custkey"), "left").count()
-    } catch { case NonFatal(_) => () }
+    val spark = GraftSession.create("graft-bench")
+    val cpus = spark.sparkContext.defaultParallelism
+    CatalogBench.warmUp(spark, sfDir)
 
     // Contention self-identification (VERDICT r5 #5): the driver's bench can
     // land on a contended box, producing phantom regressions that waste a
@@ -84,43 +67,25 @@ object Bench {
     val loadAvgStart = loadAvg()
     val sentinelStartSec = sentinelSec()
 
-    // Two executions per query, report the faster: the first pays one-off
-    // whole-stage-codegen JIT (~0.3-1 s/plan), which amortizes to nothing on
-    // a long-running engine — steady-state plan cost is the comparable number.
-    // A failing catalog query must NOT record its fast failure as a timing:
-    // round 6's testdata dtype drift broke 34 queries whose ~0.08 s analysis
-    // errors read as GREAT times in the driver's bench, hiding the breakage.
-    // Failures time as -1.0 and surface in a top-level "errors" object.
+    // Min-of-two per query (CatalogBench.timeCatalog). A failing catalog
+    // query must NOT record its fast failure as a timing: round 6's testdata
+    // dtype drift broke 34 queries whose ~0.08 s analysis errors read as
+    // GREAT times in the published bench, hiding the breakage. Failures time
+    // as -1.0 and surface in a top-level "errors" object.
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
-        catch { case NonFatal(t) => errors(name) = jsonErr(t); -1.0 }
-      }
-      val a = once(); val b = once()
-      name -> (if (a < 0 || b < 0) -1.0 else math.min(a, b))
+    val results = CatalogBench.timeCatalog(spark, sfDir, SparkEntry.queries.keys.toSeq) {
+      (name, t) => errors(name) = jsonErr(t)
     }
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val errJson =
-      if (errors.isEmpty) ""
-      else errors.map { case (k, v) => s""""$k":"$v"""" }
-        .mkString(""","errors":{""", ",", "}")
-    val total = if (results.nonEmpty) results.map(_._2).filter(_ >= 0).sum else 0.0
+    val total = catalogTotal(results)
     val base = results.toMap
 
     // min-of-two timing of a probe plan; -1.0 sentinel on failure so a query
     // failing against the probe tables never reads as a great ratio
-    def timed(fn: (SparkSession, String) => DataFrame, dir: String): Double = {
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        try { fn(spark, dir).count(); (System.nanoTime() - t0) / 1e9 }
-        catch { case NonFatal(_) => -1.0 }
-      }
-      val (a, b) = (once(), once())
-      if (a < 0 || b < 0) -1.0 else math.min(a, b)
-    }
+    def timed(fn: (SparkSession, String) => DataFrame, dir: String): Double =
+      CatalogBench.minOfTwo(
+        CatalogBench.timeOnce(spark, dir, fn)(), CatalogBench.timeOnce(spark, dir, fn)())
     // A probe measurement: ratio + the per-query JSON fragment + a compact
     // self-contained attribution object the SUMMARY lifts for its worst rows
     // (VERDICT r11 #5: the driver's artifact capture truncates the detailed
@@ -135,14 +100,8 @@ object Bench {
     // artifact could say whether the SCALED leg was slow once, twice, or
     // consistently — a twice-slow scaled leg was indistinguishable from
     // genuine superlinearity)
-    def timedAttempts(fn: (SparkSession, String) => DataFrame, dir: String): Seq[Double] = {
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        try { fn(spark, dir).count(); (System.nanoTime() - t0) / 1e9 }
-        catch { case NonFatal(_) => -1.0 }
-      }
-      Seq(once(), once())
-    }
+    def timedAttempts(fn: (SparkSession, String) => DataFrame, dir: String): Seq[Double] =
+      Seq(CatalogBench.timeOnce(spark, dir, fn)(), CatalogBench.timeOnce(spark, dir, fn)())
     def jsonArr(xs: Seq[Double]): String =
       xs.map(x => f"$x%.4f").mkString("[", ",", "]")
     def probeRowVs(name: String, b: Double, dir: String,
@@ -1416,10 +1375,8 @@ object Bench {
     // end-of-run contention sample: drift vs the start sample flags a run
     // that degraded mid-flight (another tenant landed on the box)
     val (loadAvgEnd, sentinelEndSec) = (loadAvg(), sentinelSec())
-    val contentionJson =
-      s""","contention":{"cpus":$cpus,"load_avg_start":$loadAvgStart,""" +
-        s""""load_avg_end":$loadAvgEnd,"sentinel_start_sec":$sentinelStartSec,""" +
-        s""""sentinel_end_sec":$sentinelEndSec}"""
+    val contention =
+      Contention(cpus, loadAvgStart, loadAvgEnd, sentinelStartSec, sentinelEndSec)
 
     // worst_probe_ratio covers the UNIFORM 10× rows only; the two-sided
     // (100× work) probe is normalized per unit of expected work and emitted
@@ -1438,49 +1395,87 @@ object Bench {
       s""""worst_uniform_attrib":$probeWorstAttrib,"worst_skew_attrib":$skewWorstAttrib,""" +
       s""""streaming_rows_per_sec":$streamingRps,""" +
       s""""load_avg_start":$loadAvgStart,"sentinel_start_sec":$sentinelStartSec}"""
-    // VERDICT r16 #1: the stdout line must survive the driver's bounded tail
-    // capture AND parse as one JSON document; four straight rounds of ~17 KB
-    // lines were truncated to an unparseable tail. Two changes vs r16:
-    // (a) the COMPLETE detail document (probe/skew/streaming/serving legs,
-    //     the worst-row attribution objects, full-precision timings) lives in
-    //     /tmp/bench_last.json PLUS a per-leg /tmp/bench_last_c$cpus.json so
-    //     the 32- and 8-core legs stop clobbering each other;
-    // (b) the stdout line keeps ONLY the contract fields (metric/value/unit/
-    //     sf), a compact summary (attribution blobs moved to the file), the
-    //     contention sample, any errors, and the FULL "queries" map (all
-    //     entries, none removed or renamed) at 4-decimal precision — 0.1 ms,
-    //     two orders below query noise. ~5.5 KB instead of ~17 KB. No timed
-    //     path changed; same timing methodology, reduced print precision on
-    //     the stdout copy only (the file keeps full precision).
-    def r4(v: Double): String = {
-      val r = math.rint(v * 10000) / 10000
-      if (r == math.floor(r) && math.abs(r) < 1e15) s"${r.toLong}.0" else r.toString
-    }
-    val summaryCompact = s""""summary":{"total_sec":${r4(total)},"n_queries":${results.size},""" +
-      s""""n_errors":${errors.size},""" +
-      s""""worst_probe_ratio":${r4(probeWorst)},"worst_uniform_ratio":${r4(probeWorst)},""" +
-      s""""worst_twosided_per_unit":${r4(probeTwoSidedPerUnit)},"worst_skew_ratio":${r4(skewWorst)},""" +
-      s""""worst_uniform_query":$probeWorstQuery,"worst_skew_query":$skewWorstQuery,""" +
-      s""""streaming_rows_per_sec":$streamingRps,""" +
-      s""""load_avg_start":$loadAvgStart,"sentinel_start_sec":$sentinelStartSec}"""
-    val qsCompact = results.map { case (k, v) => "\"" + k + "\":" + r4(v) }
-      .mkString("{", ",", "}")
     val fullJson =
       s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir",""" +
-        s"""$summary$contentionJson$streamingJson$rollupServingJson$indexServingJson$shingleGovernanceJson$pairStreamingJson$longDocJson$probeJson$skewJson$errJson,"queries":$qs}"""
-    // key order: queries FIRST, summary LAST — if a capture still truncates
-    // to a tail despite the 5.5 KB line, the tail ends with the summary +
-    // contention (the pre-r17 artifacts' only readable content), not with an
-    // uninterpretable mid-queries fragment
-    val stdoutLine =
-      s"""{"metric":"total","value":${r4(total)},"unit":"sec","sf":"$sfDir",""" +
-        s""""queries":$qsCompact$errJson,$summaryCompact$contentionJson}"""
+        s"""$summary${contention.json}$streamingJson$rollupServingJson$indexServingJson$shingleGovernanceJson$pairStreamingJson$longDocJson$probeJson$skewJson${errorsJson(errors)},"queries":$qs}"""
+    val line = stdoutLine(sfDir, results, errors,
+      Headline(probeWorst, probeTwoSidedPerUnit, skewWorst, probeWorstQuery, skewWorstQuery,
+        streamingRps),
+      contention)
     try {
       for (p <- Seq("/tmp/bench_last.json", s"/tmp/bench_last_c$cpus.json"))
         java.nio.file.Files.write(java.nio.file.Paths.get(p), fullJson.getBytes("UTF-8"))
       println(s"""{"bench_json_file":"/tmp/bench_last.json","bench_json_file_leg":"/tmp/bench_last_c$cpus.json"}""")
     } catch { case NonFatal(_) => () }
-    println(stdoutLine)
+    println(line)
     spark.stop()
+  }
+
+  /** The stdout summary's figures beside the catalog timings. */
+  private[graft] final case class Headline(
+      probeWorst: Double, probeTwoSidedPerUnit: Double, skewWorst: Double,
+      probeWorstQuery: String, skewWorstQuery: String, streamingRps: Long)
+
+  /** Contention self-identification: the 1-min load average and the
+    * fixed-cost CPU sentinel, sampled at the start and at the end of a run.
+    */
+  private[graft] final case class Contention(
+      cpus: Int, loadAvgStart: Double, loadAvgEnd: Double,
+      sentinelStartSec: Double, sentinelEndSec: Double) {
+    def json: String =
+      s""","contention":{"cpus":$cpus,"load_avg_start":$loadAvgStart,""" +
+        s""""load_avg_end":$loadAvgEnd,"sentinel_start_sec":$sentinelStartSec,""" +
+        s""""sentinel_end_sec":$sentinelEndSec}"""
+  }
+
+  private[graft] def catalogTotal(results: Seq[(String, Double)]): Double =
+    results.map(_._2).filter(_ >= 0).sum
+
+  /** The `"errors"` member (with its leading comma); empty when none failed. */
+  private def errorsJson(errors: scala.collection.Map[String, String]): String =
+    if (errors.isEmpty) ""
+    else errors.map { case (k, v) => s""""$k":"$v"""" }
+      .mkString(""","errors":{""", ",", "}")
+
+  /** Rounded to 4 decimals — 0.1 ms, two orders below query noise. */
+  private def r4(v: Double): String = {
+    val r = math.rint(v * 10000) / 10000
+    if (r == math.floor(r) && math.abs(r) < 1e15) s"${r.toLong}.0" else r.toString
+  }
+
+  /** The one stdout line. It must survive a bounded tail capture
+    * AND parse as one JSON document (four straight rounds of ~17 KB lines
+    * were truncated to an unparseable tail), so it keeps ONLY the contract
+    * fields (metric/value/unit/sf), the FULL "queries" map (all entries, none
+    * removed or renamed) at 4-decimal precision, any errors, a compact
+    * summary and the contention sample: ~5.5 KB. The complete detail
+    * document (probe/skew/streaming/serving legs, the worst-row attribution
+    * objects, full precision) goes to /tmp/bench_last.json plus a per-leg
+    * /tmp/bench_last_c$cpus.json so the 32- and 8-core legs don't clobber
+    * each other.
+    *
+    * Key order: queries FIRST, summary LAST — if a capture still truncates
+    * to a tail, the tail ends with the summary + contention (the pre-r17
+    * artifacts' only readable content), not with an uninterpretable
+    * mid-queries fragment.
+    */
+  private[graft] def stdoutLine(
+      sfDir: String,
+      results: Seq[(String, Double)],
+      errors: scala.collection.Map[String, String],
+      h: Headline,
+      c: Contention): String = {
+    val total = catalogTotal(results)
+    val qs = results.map { case (k, v) => "\"" + k + "\":" + r4(v) }
+      .mkString("{", ",", "}")
+    val summary = s""""summary":{"total_sec":${r4(total)},"n_queries":${results.size},""" +
+      s""""n_errors":${errors.size},""" +
+      s""""worst_probe_ratio":${r4(h.probeWorst)},"worst_uniform_ratio":${r4(h.probeWorst)},""" +
+      s""""worst_twosided_per_unit":${r4(h.probeTwoSidedPerUnit)},"worst_skew_ratio":${r4(h.skewWorst)},""" +
+      s""""worst_uniform_query":${h.probeWorstQuery},"worst_skew_query":${h.skewWorstQuery},""" +
+      s""""streaming_rows_per_sec":${h.streamingRps},""" +
+      s""""load_avg_start":${c.loadAvgStart},"sentinel_start_sec":${c.sentinelStartSec}}"""
+    s"""{"metric":"total","value":${r4(total)},"unit":"sec","sf":"$sfDir",""" +
+      s""""queries":$qs${errorsJson(errors)},$summary${c.json}}"""
   }
 }

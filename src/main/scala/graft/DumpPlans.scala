@@ -12,7 +12,6 @@ package graft
 object DumpPlans {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val outDir = sys.env.getOrElse("OUT_DIR", "plans")
     val suffix = sys.env.getOrElse("SUFFIX", "_after")
     val confs = sys.env.get("CONFS").toSeq.flatMap(_.split(',').filter(_.nonEmpty)).map { kv =>
@@ -21,14 +20,7 @@ object DumpPlans {
         case _ => sys.error(s"CONFS entry '$kv' is not key=value")
       }
     }
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.tune(spark)
+    val spark = GraftSession.create("graft-dumpplans")
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
     new java.io.File(outDir).mkdirs()
     val names = if (args.isEmpty) SparkEntry.queries.keys.toSeq.sorted else args.toSeq

@@ -3,10 +3,13 @@ package graft
 import org.apache.spark.{SparkConf, SparkContext}
 import org.apache.spark.sql.SparkSession
 
-/** SparkSession factory for the graft engine.
+/** SparkSession factory for the graft engine — the one way a session is
+  * opened: every main, the tests and the pipeline benchmark start here, and
+  * every session it returns carries [[GraftExtensions]].
   *
-  * The master defaults to `local[SPARK_GRAFT_CPUS]`; on a real cluster the
-  * same factory is used with that cluster's master. Every session it returns
+  * The master defaults to `local[N]`, N = `SPARK_GRAFT_CPUS` if set, else
+  * the JVM's available processors; on a real cluster the same factory is
+  * used with that cluster's master. Every session it returns
   * runs `spark.sql.shuffle.partitions` = the core count of its context
   * (Spark's `defaultParallelism`, so `local[N]` gives N), and children made
   * with `newSession()` inherit it. Batch queries would tolerate a larger
@@ -23,18 +26,21 @@ object GraftSession {
 
   /** The session over this JVM's context, started on `master` if none runs
     * yet. A context that already runs keeps its own cores, and so its own
-    * shuffle-partition count: `master` only matters on first start.
+    * shuffle-partition count: `master` only matters on first start. Fails
+    * if this JVM already runs a session without [[GraftExtensions]] (e.g. a
+    * `spark-shell` started without [[GraftExtensions.Conf]]): Spark would
+    * hand that session back, and the extension cannot be added to it.
     */
   def create(
       appName: String = "graft",
-      master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"): SparkSession = {
+      master: String = s"local[$defaultCpus]"): SparkSession = {
     val conf = new SparkConf()
       .setMaster(master)
       .setAppName(appName)
-      // the engine's own surface (dot_arrays, rollup routing) arrives the
-      // way any Spark library's does: through SparkSessionExtensions. A
-      // cluster deployment passes the same conf to spark-submit.
-      .set("spark.sql.extensions", "graft.GraftExtensions")
+      // the engine's own surface (dot_arrays, rollup routing, the native
+      // joins) arrives the way any Spark library's does: through
+      // SparkSessionExtensions. A cluster deployment passes the same conf.
+      .set("spark.sql.extensions", classOf[GraftExtensions].getName)
       .set("spark.sql.session.timeZone", "UTC")
       .set("spark.ui.enabled", "false")
       .set("spark.sql.adaptive.enabled", "true")
@@ -45,9 +51,17 @@ object GraftSession {
       .config(conf)
       .config("spark.sql.shuffle.partitions", sc.defaultParallelism.toLong)
       .getOrCreate()
+    if (!GraftExtensions.armed(spark))
+      throw new IllegalStateException(
+        "this JVM already runs a Spark session without the graft extension; " +
+          s"start it with ${GraftExtensions.Conf}")
     sc.setLogLevel("WARN")
     Tables.tune(spark)
   }
+
+  /** `SPARK_GRAFT_CPUS` if set, else the JVM's available processors. */
+  private def defaultCpus: String =
+    sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
 
   /** One-call engine bootstrap: a session (child of the JVM's context, so
     * repeated opens stay isolated) with every table registered as a view,

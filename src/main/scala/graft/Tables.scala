@@ -9,8 +9,8 @@ import scala.util.control.NonFatal
 /** Loaders for the driver-generated TESTDATA tables plus session tuning.
   *
   * [[tune]] runs once per session: [[GraftSession]] applies it to every
-  * session it makes, and each main applies it to the session it builds. The
-  * loaders never re-apply it, so a conf a caller sets on a tuned session
+  * session it makes (and every main opens its session there). The loaders
+  * never re-apply it, so a conf a caller sets on a tuned session
   * (a broadcast threshold, an AQE switch) holds for the queries it builds.
   */
 object Tables {

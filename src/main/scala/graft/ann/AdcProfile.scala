@@ -4,8 +4,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import scala.util.control.NonFatal
-
 import graft.Tables
 
 /** Builder-side per-stage attribution for the IVF/ADC serving family
@@ -20,19 +18,9 @@ import graft.Tables
 object AdcProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val rounds = sys.env.getOrElse("ROUNDS", "3").toInt
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.tune(spark)
-    graft.functions.VectorFunctions.register(spark)
-    Tables.AllTables.foreach(t => try Tables.read(spark, sfDir, t).count()
-      catch { case NonFatal(_) => () })
+    val spark = graft.GraftSession.create("graft-adcprofile")
+    graft.CatalogBench.warmUp(spark, sfDir)
 
     import SimilarityOps._
     val nQueries = 10

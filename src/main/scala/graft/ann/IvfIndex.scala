@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.VectorFunctions
 import SimilarityOps.{probeCells, withCentroidAssignment, withNorm}
 
 /** Durable IVF index — the similarity-search analogue of the rollup table's
@@ -531,7 +530,6 @@ object IvfIndex {
   private def absorb(
       spark: SparkSession, indexPath: String, embeddings: DataFrame, batchId: Long,
       checkLease: Boolean): Unit = {
-    VectorFunctions.register(spark)
     if (checkLease) assertNotReclustering(spark, indexPath)
     // codebook identity snapshot (BOTH manifests): the sets we ENCODE under
     // must still govern the index when our segment becomes live (see the
@@ -649,7 +647,6 @@ object IvfIndex {
   def probedCells(
       spark: SparkSession, indexPath: String, queries: DataFrame, nprobe: Int,
       asOf: Option[Long] = None): Seq[Int] = {
-    VectorFunctions.register(spark)
     probeCells(withNorm(queries, "qid", "qv", "qn"), nprobe,
       currentCentroids(spark, indexPath, asOf))
       .select("probe").distinct().collect().map(_.getInt(0)).sorted.toSeq
@@ -667,7 +664,6 @@ object IvfIndex {
   def candidateRows(
       spark: SparkSession, indexPath: String, queries: DataFrame, nprobe: Int,
       asOf: Option[Long] = None): Long = {
-    VectorFunctions.register(spark)
     val probes = probeCells(withNorm(queries, "qid", "qv", "qn"), nprobe,
       currentCentroids(spark, indexPath, asOf))
     indexFrame(spark, indexPath, asOf, excludeSegment = None)
@@ -711,7 +707,6 @@ object IvfIndex {
       spark: SparkSession, index: DataFrame,
       cents: IndexedSeq[Array[Double]], samplePpm: Long): Double = {
     import org.apache.spark.sql.types.{DecimalType, DoubleType}
-    VectorFunctions.register(spark)
     // nn (|v|²) is stored at index time; least-of-cells gives |c|²−2v·c of
     // the ASSIGNED centroid, so nn + dmin is the true squared distance
     val row = withCentroidAssignment(
@@ -1015,7 +1010,6 @@ object IvfIndex {
       nprobe: Int = 2,
       excludeSegment: Option[Long] = None,
       asOf: Option[Long] = None): DataFrame = {
-    VectorFunctions.register(spark)
     // `asOf` pins BOTH the corpus rows and the centroid set (probes computed
     // under a later recluster's centroids would hit the wrong cells of the
     // snapshot) — so re-running a past search is bit-reproducible even after
@@ -1111,7 +1105,6 @@ object IvfIndex {
       excludeSegment: Option[Long] = None,
       asOf: Option[Long] = None,
       pushRerankIds: Boolean = false): DataFrame = {
-    VectorFunctions.register(spark)
     val q = withNorm(queries, "qid", "qv", "qn")
     val index = withOptionalCodes(
       indexFrame(spark, indexPath, asOf, excludeSegment,
@@ -1144,7 +1137,6 @@ object IvfIndex {
       spark: SparkSession, indexPath: String, queries: DataFrame, nprobe: Int,
       excludeSegment: Option[Long] = None, asOf: Option[Long] = None,
       indexOverride: Option[DataFrame] = None): DataFrame = {
-    VectorFunctions.register(spark)
     val q = withNorm(queries, "qid", "qv", "qn")
     val probes = probeCells(q, nprobe, currentCentroids(spark, indexPath, asOf))
     val index = indexOverride.getOrElse(withOptionalCodes(
@@ -1289,7 +1281,6 @@ object IvfIndex {
       excludeSegment: Option[Long] = None,
       asOf: Option[Long] = None,
       pushRerankIds: Boolean = false): DataFrame = {
-    VectorFunctions.register(spark)
     val cents = currentCentroids(spark, indexPath, asOf)
     val q = withNorm(queries, "qid", "qv", "qn")
     val plut = SimilarityOps.radcLutArr(probeCells(q, nprobe, cents), cents,
@@ -1438,7 +1429,6 @@ object IvfIndex {
       codebookRounds: Int = 2,
       k: Option[Int] = None): Int = {
     import org.apache.spark.sql.types.{DecimalType, DoubleType}
-    VectorFunctions.register(spark)
     // `k` re-sizes the centroid set: Lloyd re-inits from the deterministic
     // md5 seed at the new K instead of iterating the current set — the
     // GROW-K path (cells must stay O(n/K) as the corpus grows; a fixed K

@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.Tables
-import graft.functions.VectorFunctions
 
 /** Similarity search over the `embeddings` table (`embedding:
   * array<float>`, 64-dim).
@@ -28,7 +27,6 @@ object SimilarityOps {
     * codegen'd [[graft.functions.ArrayDotProduct]].
     */
   private[ann] def withNorm(df: DataFrame, idAs: String, vAs: String, nAs: String): DataFrame = {
-    VectorFunctions.register(df.sparkSession)
     df.select(col("vec_id").as(idAs), transform(col("embedding"), _.cast("double")).as(vAs))
       .withColumn(nAs, expr(s"dot_arrays($vAs, $vAs)"))
   }
@@ -295,7 +293,6 @@ object SimilarityOps {
   }
 
   def lshBuckets(spark: SparkSession, sfDir: String): DataFrame = {
-    VectorFunctions.register(spark)
     val e = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))
     // one literal coef array column per hyperplane, then the packed bucket
@@ -376,7 +373,6 @@ object SimilarityOps {
     * candidate-pruning key for IVF search.
     */
   def ivfAssignments(spark: SparkSession, sfDir: String): DataFrame = {
-    VectorFunctions.register(spark)
     val e = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))
     withCentroidAssignment(e, "v").select(col("vec_id"), col("centroid_id"))
@@ -587,7 +583,6 @@ object SimilarityOps {
     */
   def kmeansIter(spark: SparkSession, sfDir: String, iters: Int = KmeansIters): DataFrame = {
     import org.apache.spark.sql.types.{DecimalType, DoubleType}
-    VectorFunctions.register(spark)
     val e = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))
       .localCheckpoint() // scanned once per round + once for the ledger
@@ -679,7 +674,6 @@ object SimilarityOps {
     * rank filter.
     */
   def embedOutliers(spark: SparkSession, sfDir: String, k: Int = 3): DataFrame = {
-    VectorFunctions.register(spark)
     val e = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))
     val withC = (0 until NumCentroids).foldLeft(e) { (df, c) =>
@@ -750,7 +744,6 @@ object SimilarityOps {
   def knnGraph(
       spark: SparkSession, sfDir: String, k: Int = 3,
       subCellThreshold: Long = CellPairSubThreshold): DataFrame = {
-    VectorFunctions.register(spark)
     knnGraphFrom(
       Tables.embeddings(spark, sfDir)
         .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v")),
@@ -863,7 +856,6 @@ object SimilarityOps {
   def knnGraphHotSlice(
       spark: SparkSession, sfDir: String, k: Int = 3,
       subCellThreshold: Long = HotSliceSubThreshold): DataFrame = {
-    VectorFunctions.register(spark)
     knnGraphFrom(hotSliceEmb(spark, sfDir), k, subCellThreshold)
   }
 
@@ -899,7 +891,6 @@ object SimilarityOps {
     * cells are past the clamp and how big their per-task blocks have grown.
     */
   def knnClampLedger(spark: SparkSession, sfDir: String): DataFrame = {
-    VectorFunctions.register(spark)
     val threshold =
       hotSliceClampThreshold(Tables.embeddings(spark, sfDir).count())
     val assigns = withCentroidAssignment(hotSliceEmb(spark, sfDir), "v")
@@ -926,7 +917,6 @@ object SimilarityOps {
   def semDedup(
       spark: SparkSession, sfDir: String, threshold: Double = 0.45,
       subCellThreshold: Long = CellPairSubThreshold): DataFrame = {
-    VectorFunctions.register(spark)
     semDedupFrom(
       Tables.embeddings(spark, sfDir)
         .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v")),
@@ -941,7 +931,6 @@ object SimilarityOps {
   def semDedupHotSlice(
       spark: SparkSession, sfDir: String, threshold: Double = 0.45,
       subCellThreshold: Long = HotSliceSubThreshold): DataFrame = {
-    VectorFunctions.register(spark)
     semDedupFrom(hotSliceEmb(spark, sfDir), threshold, subCellThreshold)
   }
 
@@ -1258,7 +1247,6 @@ object SimilarityOps {
 
   /** Vectors with their 8 subvector columns materialized (`v_0`…`v_7`). */
   private def withSubvectors(spark: SparkSession, sfDir: String): DataFrame = {
-    VectorFunctions.register(spark)
     addSubvectors(
       Tables.embeddings(spark, sfDir)
         .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v")),
@@ -1529,7 +1517,6 @@ object SimilarityOps {
       spark: SparkSession, sfDir: String,
       nQueries: Int = 10, k: Int = 3, nprobe: Int = 2,
       rerank: Int = AdcRerank): DataFrame = {
-    VectorFunctions.register(spark)
     val e = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))
     // corpus side at vector granularity: cell id + the 8-code PQ vector
@@ -1717,7 +1704,6 @@ object SimilarityOps {
       rerank: Int = AdcRerank,
       cents: IndexedSeq[Array[Double]] = centroids,
       cb: IndexedSeq[IndexedSeq[Array[Double]]] = pqCodebook): DataFrame = {
-    VectorFunctions.register(spark)
     val e = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))
     val coded = withCentroidAssignment(e, "v", cents)
@@ -1889,7 +1875,6 @@ object SimilarityOps {
   private def pqSubvectors(
       spark: SparkSession, sfDir: String, onResiduals: Boolean,
       cents: IndexedSeq[Array[Double]]): DataFrame = {
-    VectorFunctions.register(spark)
     pqSubvectorsOf(
       Tables.embeddings(spark, sfDir)
         .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v")),

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -64,22 +63,4 @@ case class ArrayDotProduct(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
-}
-
-object VectorFunctions {
-
-  /** Register `dot_arrays` in the session's function registry (idempotent) so
-    * it is usable from both the Column API (via `expr`) and SQL text.
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_arrays",
-      exprs => ArrayDotProduct(exprs(0), exprs(1)),
-      "built-in")
-
-  /** Dot product of two array<double> columns (names or expressions). */
-  def dotArrays(spark: SparkSession, a: String, b: String): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.expr(s"dot_arrays($a, $b)")
-  }
 }

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, BindReferences, Descending, Expression, GenericInternalRow, JoinedRow, RowOrdering, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan, Project}
@@ -60,7 +60,6 @@ object AsOf {
       forward: Boolean = false): DataFrame = {
     require(keys.nonEmpty, "as-of join needs at least one equi-key")
     val spark = left.sparkSession
-    ensureStrategy(spark)
     val lPlan = left.queryExecution.analyzed
     // fresh ExprIds on the right side so self-joins (same source both sides)
     // don't alias the same attributes into both children
@@ -98,17 +97,6 @@ object AsOf {
       forward)
     GraftSqlShim.ofRows(spark, node)
   }
-
-  /** Idempotently register the planner strategy on a plain session (the
-    * [[graft.GraftExtensions]] injection covers sessions built by
-    * [[graft.GraftSession]]; this hook covers everything else).
-    */
-  def ensureStrategy(spark: SparkSession): Unit = synchronized {
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
-    }
-  }
 }
 
 /** Logical as-of join: left output plus the (nullable) right output. */
@@ -131,7 +119,10 @@ case class AsOfJoinPlan(
     copy(left = newLeft, right = newRight)
 }
 
-/** Plans the logical node 1:1 onto the physical merge operator. */
+/** Plans the logical node 1:1 onto the physical merge operator. The planner
+  * learns it from [[graft.GraftExtensions]], which every engine session
+  * carries; no other path registers it.
+  */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case j: AsOfJoinPlan =>

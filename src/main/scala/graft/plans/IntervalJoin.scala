@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, BindReferences, Expression, JoinedRow, RowOrdering, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan, Project}
@@ -43,7 +43,6 @@ object IntervalJoin {
       rightRange: (String, String)): DataFrame = {
     require(keys.nonEmpty, "interval join needs at least one equi-key")
     val spark = left.sparkSession
-    ensureStrategy(spark)
     val lPlan = left.queryExecution.analyzed
     val rPlan = Project(
       right.queryExecution.analyzed.output.map(a => Alias(a, a.name)()),
@@ -78,13 +77,6 @@ object IntervalJoin {
       rStart, rEnd)
     GraftSqlShim.ofRows(spark, node)
   }
-
-  def ensureStrategy(spark: SparkSession): Unit = synchronized {
-    if (!spark.experimental.extraStrategies.contains(IntervalJoinStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ IntervalJoinStrategy
-    }
-  }
 }
 
 case class IntervalJoinPlan(
@@ -104,6 +96,9 @@ case class IntervalJoinPlan(
     copy(left = newLeft, right = newRight)
 }
 
+/** Plans the logical node 1:1 onto the physical sweep operator; injected
+  * by [[graft.GraftExtensions]] like [[AsOfJoinStrategy]].
+  */
 object IntervalJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case j: IntervalJoinPlan =>

@@ -13,9 +13,9 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, IntegerType, LongTyp
 /** Rollup-aware aggregate routing (SURVEY.md §4 "materialized
   * pre-aggregation"): Druid answers dashboard aggregates from its ingest-time
   * rollup automatically; in Spark that takes a plan rewrite. This optimizer
-  * rule (installed through the public `spark.experimental.extraOptimizations`
-  * hook; a deployment would wire the same rule via
-  * `SparkSessionExtensions.injectOptimizerRule`) rewrites
+  * rule (reached through the delegate [[graft.GraftExtensions]] injects with
+  * `SparkSessionExtensions.injectOptimizerRule`, once [[RollupRewrite.install]]
+  * has bound it to a session) rewrites
   *
   *   Aggregate(groupings ⊆ {epoch_s, house_id, appliance_id, appliance_name},
   *             aggs ∈ {count, sum/min/max(power)},
@@ -300,11 +300,10 @@ class RollupRewrite(
     if (!rollupCols.forall(rollupAttr.contains)) return None
     val epochAttr = rollupAttr("epoch_s")
 
-    // at most ONE distinct argument-set: this rule may run AFTER the
-    // optimizer's RewriteDistinctAggregates batch (the experimental-hook
-    // fallback), where an emitted multi-distinct Aggregate would reach
-    // physical planning unexpanded. One distinct set is always plannable
-    // (AggUtils' one-distinct path); more than one stays on raw.
+    // at most ONE distinct argument-set: one distinct set is always
+    // plannable (AggUtils' one-distinct path); an emitted multi-distinct
+    // Aggregate would plan only if RewriteDistinctAggregates still runs
+    // after this rule, which nothing pins, so it stays on raw.
     val distinctSets = aggExprs.flatMap(_.collect {
       case AggregateExpression(fn, _, true, _, _) => fn.children.map(_.canonicalized)
     }).distinct
@@ -1054,13 +1053,6 @@ object RollupRewrite {
   private[graft] def installedFor(spark: SparkSession): Option[RollupRewrite] =
     Option(installed.get(spark))
 
-  /** The session was built with `spark.sql.extensions=graft.GraftExtensions`,
-    * so the delegate rule is already in its optimizer batch list.
-    */
-  private def extensionConfigured(spark: SparkSession): Boolean =
-    spark.conf.getOption("spark.sql.extensions")
-      .exists(_.split(",").map(_.trim).contains("graft.GraftExtensions"))
-
   /** Register the rollup view, capture the canonical raw-view definitions,
     * and install the rule (idempotent). `canonicalRaw` is the engine's raw
     * power view over the SAME events source (e.g. `Grid.powerReadings`); its
@@ -1068,9 +1060,10 @@ object RollupRewrite {
     * Filter-atom special mappings (IsNotNull translation, ts range → epoch_s)
     * are derived from the captured defs here, never assumed downstream.
     *
-    * In a session bootstrapped through [[graft.GraftExtensions]] the rule
-    * activates via the injected delegate; otherwise it lands on the public
-    * `spark.experimental.extraOptimizations` hook.
+    * The rule activates through the delegate [[graft.GraftExtensions]]
+    * injects, so the session must carry that extension (every
+    * [[graft.GraftSession]] session does); a session without it is refused,
+    * since nothing would ever route there.
     */
   def install(spark: SparkSession, rollupPath: String, canonicalRaw: DataFrame): Unit =
     install(spark, rollupPath, canonicalRaw, Nil)
@@ -1088,6 +1081,8 @@ object RollupRewrite {
       rollupPath: String,
       canonicalRaw: DataFrame,
       coarse: Seq[(String, Long)]): Unit = {
+    require(graft.GraftExtensions.armed(spark),
+      s"RollupRewrite.install needs a session built with ${graft.GraftExtensions.Conf}")
     require(coarse.forall(_._2 > 1), s"coarse granularities must be >1 s")
     spark.read.parquet(rollupPath)
       .createOrReplaceTempView(RollupViewName)
@@ -1116,15 +1111,7 @@ object RollupRewrite {
           (1L -> RollupViewName),
       lattice = Some((rollupPath, coarse)))
     installed.put(spark, rule)
-    if (!extensionConfigured(spark)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ rule
-    }
   }
 
-  def uninstall(spark: SparkSession): Unit = {
-    installed.remove(spark)
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_.isInstanceOf[RollupRewrite])
-  }
+  def uninstall(spark: SparkSession): Unit = { installed.remove(spark); () }
 }

@@ -173,7 +173,9 @@ object RollupTable {
 
   /** The existing store's columns differ from what the current engine
     * materializes (ignoring the derived segment-layout columns). A missing
-    * store is NOT drift — the increment write creates it.
+    * store is NOT drift — the increment write creates it. Any other read
+    * failure (e.g. a corrupt footer) propagates: upserting partitions into
+    * a store whose schema could not be read would hide the damage.
     */
   private def schemaDrifted(
       spark: SparkSession, outPath: String, currentCols: Seq[String]): Boolean = {
@@ -181,7 +183,7 @@ object RollupTable {
     try {
       val stored = spark.read.parquet(outPath).columns.toSet -- layoutCols
       stored != currentCols.toSet
-    } catch { case _: Exception => false } // no store yet
+    } catch { case e: AnalysisException if NoStoreYet(e.getCondition) => false }
   }
 
   /** One streaming micro-batch of finalized rollup groups written as a

@@ -98,7 +98,6 @@ object AnnProps extends Properties("ann") {
 
   property("centroid assignment = naive argmin with lowest-k ties; kept distance = naive min") =
     forAll(genCase) { case (vectors, cents) =>
-      graft.functions.VectorFunctions.register(spark)
       val df = vectors.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("vec_id", "v")
       val got = SimilarityOps
         .withCentroidAssignment(df, "v", cents.toIndexedSeq, keepDistance = Some("dmin"))

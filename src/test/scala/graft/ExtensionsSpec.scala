@@ -22,7 +22,7 @@ class ExtensionsSpec extends AnyFunSuite with SharedSpark {
   test("dot_arrays resolves in a fresh child session (injected, not temp-registered)") {
     // newSession() gets a fresh temp-function registry: anything resolvable
     // there came from the extension's injectFunction, not from a runtime
-    // VectorFunctions.register call some other suite made.
+    // registration call some other suite made.
     val s2 = spark.newSession()
     val d = s2.sql("SELECT dot_arrays(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d")
       .head().getDouble(0)

@@ -155,6 +155,29 @@ class IngestSpec extends AnyFunSuite with SharedSpark {
     }
   }
 
+  test("an unreadable 1 s store fails the increment instead of upserting into it") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val dir = Files.createTempDirectory("rollup_corrupt").toString
+    RollupTable.materialize(spark, sfDir, dir)
+    val since = RollupTable.read(spark, dir)
+      .agg(max(col("epoch_s") - col("epoch_s") % 3600)).head().getLong(0)
+    // schema inference reads one sampled footer, so every data file is made
+    // unreadable: the drift check then cannot tell what the store holds
+    val junk = "not a parquet file"
+    val files = Files.walk(Paths.get(dir)).iterator().asScala
+      .filter(_.toString.endsWith(".parquet")).toList
+    files.foreach(f => Files.write(f, junk.getBytes))
+    intercept[org.apache.spark.SparkException] {
+      RollupTable.materializeIncrement(spark, sfDir, dir, since)
+    }
+    // no partition was upserted past the damage: the same files, untouched
+    val after = Files.walk(Paths.get(dir)).iterator().asScala
+      .filter(_.toString.endsWith(".parquet")).toList
+    assert(after.sortBy(_.toString) == files.sortBy(_.toString))
+    files.foreach(f => assert(new String(Files.readAllBytes(f)) == junk, f))
+  }
+
   test("incremental coarse-lattice cascade replaces only the new hour segments") {
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._

@@ -166,7 +166,6 @@ class IvfIndexSpec extends AnyFunSuite with SharedSpark {
     */
   private def bruteTopK(dir: String, qs: org.apache.spark.sql.DataFrame, k: Int)
       : Set[(Long, Long)] = {
-    graft.functions.VectorFunctions.register(spark)
     val idx = IvfIndex.read(spark, dir).select(
       col("vec_id").as("cid"), col("v").as("cv"), col("nn").as("cn"))
     val q = qs.select(
@@ -504,7 +503,6 @@ class IvfIndexSpec extends AnyFunSuite with SharedSpark {
     IvfIndex.appendBatch(spark, dir, embs.filter(col("vec_id") % 4 === 0), batchId = 2L)
     // every stored row's cell id agrees with the live centroid set — the
     // stale-cell corruption the lease exists to prevent
-    graft.functions.VectorFunctions.register(spark)
     val cents = IvfIndex.currentCentroids(spark, dir)
     val stored = IvfIndex.read(spark, dir).select("vec_id", "v", "centroid_id")
     val reassigned = graft.ann.SimilarityOps

@@ -448,7 +448,7 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
     * fails EVERY attempt including uncontended ones, scheduler noise doesn't:
     * the gate passes if ANY of up to `attempts` measurements sustains the
     * rate, and when all attempts fail WHILE the box reads contended
-    * (1-min load above this JVM's own core budget), it waits — bounded — for
+    * (1-min load above the box's core count), it waits — bounded — for
     * the neighbors to drain and takes two more measurements before judging.
     */
   private def sustains(label: String, minRate: Double, attempts: Int = 4)(
@@ -459,9 +459,11 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
     if (!tried.lastOption.exists(_ > minRate)) {
       def loadAvg = java.lang.management.ManagementFactory
         .getOperatingSystemMXBean.getSystemLoadAverage
-      val own = spark.sparkContext.defaultParallelism // this JVM's core budget
+      // the box's cores, not this JVM's local[N]: on a box with fewer cores
+      // than N a saturated load average still reads below N
+      val cores = Runtime.getRuntime.availableProcessors
       val deadline = System.nanoTime() + 180L * 1000 * 1000 * 1000
-      while (System.nanoTime() < deadline && loadAvg > own) Thread.sleep(5000)
+      while (System.nanoTime() < deadline && loadAvg > cores) Thread.sleep(5000)
       tried += measure(tried.size)
       if (!tried.lastOption.exists(_ > minRate)) tried += measure(tried.size)
     }

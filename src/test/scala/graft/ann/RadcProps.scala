@@ -55,7 +55,6 @@ object RadcProps extends Properties("radc") {
 
   property("spark residual-ADC score (ppm long) = driver recompute, every (query, candidate) pair") =
     forAll(genCase) { case (corpus, qv) =>
-      graft.functions.VectorFunctions.register(spark)
       import spark.implicits._
       val cents = SimilarityOps.centroids
       val cb = SimilarityOps.pqCodebook
