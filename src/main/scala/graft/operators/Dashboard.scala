@@ -6,16 +6,25 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * SQL layer: the three datasources become temp views and every tile is a
   * plain `spark.sql` query — the same Catalyst plans as the DataFrame
   * versions in [[Grid]], entered through SQL text (SURVEY.md §3.3).
+  *
+  * The views are unsorted: order belongs to the tile. A datasource that
+  * kept its catalog query's ORDER BY would make every tile re-sort its
+  * input (a sampling job, a range exchange and a sort, kept by Spark under
+  * a double sum) only for the tile's own ORDER BY to discard the order.
+  * With the lattice installed, `powerraw` is a projection of the 1 s level
+  * ([[graft.plans.RollupRewrite]]'s same-grain case), so a tile's own
+  * GROUP BY is the only aggregation it runs.
   */
 object Dashboard {
 
   /** Register the dashboard datasources for a scale-factor directory:
-    * `powerraw` (the SECOND rollup), `dutycycle`, `history`.
+    * `powerraw` (the SECOND rollup), `dutycycle`, `history` — the unsorted
+    * forms of [[Grid.qRollup1s]], [[Grid.dutyCycle]] and [[Grid.historyAvg]].
     */
   def registerViews(spark: SparkSession, sfDir: String): Unit = {
-    Grid.qRollup1s(spark, sfDir).createOrReplaceTempView("powerraw")
-    Grid.dutyCycle(spark, sfDir).createOrReplaceTempView("dutycycle")
-    Grid.historyAvg(spark, sfDir).createOrReplaceTempView("history")
+    Grid.rollup1sView(spark, sfDir).createOrReplaceTempView("powerraw")
+    Grid.dutyCycleView(spark, sfDir).createOrReplaceTempView("dutycycle")
+    Grid.historyAvgView(spark, sfDir).createOrReplaceTempView("history")
   }
 
   /** The six tiles (dashboard-iGridDemo.json), keyed by tile name. Relative

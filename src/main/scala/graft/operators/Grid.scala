@@ -83,6 +83,16 @@ object Grid {
     * row per group per input partition, not raw readings.
     */
   def dutyCycle(spark: SparkSession, sfDir: String): DataFrame =
+    dutyCycleView(spark, sfDir).orderBy("window_start", "appliance_id")
+
+  /** [[dutyCycle]] without its presentation order: the `dutycycle`
+    * datasource [[Dashboard.registerViews]] registers. A view that kept the
+    * sort would make every tile over it pay a range-partition sampling job,
+    * a range exchange and a sort that the tile's own ORDER BY discards —
+    * Spark's EliminateSorts keeps a Sort under `sum(double)`, whose result
+    * depends on input order.
+    */
+  def dutyCycleView(spark: SparkSession, sfDir: String): DataFrame =
     powerReadings(spark, sfDir)
       .groupBy(
         window(col("time"), "25 seconds", "5 seconds"),
@@ -95,7 +105,6 @@ object Grid {
       .withColumn("window_start", col("window.start").cast("long"))
       .drop("window")
       .select("window_start", "house_id", "appliance_id", "c_all", "c_duty", "duty_cycle")
-      .orderBy("window_start", "appliance_id")
 
   val dutyCycleSql: String =
     s"""WITH $PowerCte,
@@ -233,12 +242,22 @@ object Grid {
   }
 
   def qRollup1s(spark: SparkSession, sfDir: String): DataFrame =
-    rollup1s(spark, sfDir)
-      .withColumn("sum_power", col("sum_power_dec").cast(DoubleType))
-      .drop("sum_power_dec", "cnt_power", "min_power", "max_power", "cnt_duty")
+    rollup1sView(spark, sfDir)
       // appliance_name is part of the key: one appliance can emit two event
       // types in the same second, so (epoch_s, appliance_id) alone ties
       .orderBy("epoch_s", "appliance_id", "appliance_name")
+
+  /** The presentation columns of [[rollup1s]] (count and the double sum)
+    * without [[qRollup1s]]'s order: the `powerraw` datasource
+    * [[Dashboard.registerViews]] registers. Unsorted for the reason given at
+    * [[dutyCycleView]]; its aggregate sits at the lattice's own grain, so an
+    * installed [[graft.plans.RollupRewrite]] reads it as a projection of the
+    * 1 s level.
+    */
+  def rollup1sView(spark: SparkSession, sfDir: String): DataFrame =
+    rollup1s(spark, sfDir)
+      .withColumn("sum_power", col("sum_power_dec").cast(DoubleType))
+      .drop("sum_power_dec", "cnt_power", "min_power", "max_power", "cnt_duty")
 
   val rollup1sSql: String =
     s"""WITH $PowerCte
@@ -371,7 +390,16 @@ object Grid {
     * here one Catalyst plan. The interval filter is on the rollup's grouping
     * key so Catalyst pushes it below the first aggregate into the scan.
     */
-  def historyAvg(spark: SparkSession, sfDir: String): DataFrame = {
+  def historyAvg(spark: SparkSession, sfDir: String): DataFrame =
+    historyAvgView(spark, sfDir).orderBy("appliance_id")
+
+  /** [[historyAvg]] without its presentation order: the `history`
+    * datasource [[Dashboard.registerViews]] registers, unsorted for the
+    * reason given at [[dutyCycleView]]. Its inner rollup sits at the
+    * lattice's own grain, so an installed [[graft.plans.RollupRewrite]]
+    * reads it as a projection of the 1 s level.
+    */
+  def historyAvgView(spark: SparkSession, sfDir: String): DataFrame =
     rollup1s(spark, sfDir, tsIntervals = historyIntervals)
       .groupBy("house_id", "appliance_id")
       .agg(
@@ -383,8 +411,6 @@ object Grid {
         col("count_w"),
         col("sum_power_dec").cast(DoubleType).as("sum_power_w"),
         (col("sum_power_dec").cast(DoubleType) / col("count_w")).as("avg_power"))
-      .orderBy("appliance_id")
-  }
 
   val historyAvgSql: String = {
     val pred = historyIntervals

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.{Add, Alias, And, Attribute, AttributeReference, BinaryComparison, CaseWhen, Cast, Coalesce, Concat, CreateNamedStruct, Divide, ExprId, Expression, GreaterThan, GreaterThanOrEqual, If, In, IntegralDivide, IsNotNull, KnownNullable, LessThan, LessThanOrEqual, Literal, MicrosToTimestamp, Multiply, NamedExpression, Not, Or, Pmod, PreciseTimestampConversion, Remainder, ScalaUDF, Subtract, UnaryMinus, UnixMicros}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, ApproximatePercentile, Average, Complete, Count, HyperLogLogPlusPlus, Max, Min, Sum}
@@ -29,6 +29,15 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, IntegerType, LongTyp
   * rollup keeps DECIMAL sums — and min/max(power) become min/max of the
   * per-group extrema. Output attribute ids are preserved so parent operators
   * are untouched.
+  *
+  * A same-grain read becomes a Project: when the groups map to exactly the
+  * level's own key (epoch_s, house_id, appliance_id, appliance_name) — the
+  * grain of the dashboard's `powerraw` view and of the `history` view's inner
+  * rollup — every group is ONE stored row, so the rule projects each
+  * aggregate's value on that row (`sum(c)` → `c` at sum's type, `min`/`max`
+  * → `c`) over the same child instead of re-aggregating: no shuffle, and a
+  * tile over the view pays only its own aggregation. Count-distinct, HLL and
+  * the sketch merge keep the Aggregate.
   *
   * Correctness gates, both structural (VERDICT r1 / ADVICE r1):
   *
@@ -77,9 +86,15 @@ class RollupRewrite(
 
   import RollupRewrite.{analyzeChain, Branch, ServedKeys}
 
+  /** The optimized plan of one lattice view, or None when the view is not
+    * registered (e.g. dropped after install): that level does not route and
+    * the walk falls through. Any other failure to resolve the view
+    * propagates — a lattice that exists but cannot be read is damage to
+    * report, not a reason to answer silently from raw.
+    */
   private def rollupPlan(view: String): Option[LogicalPlan] =
     try Some(spark.table(view).queryExecution.optimizedPlan)
-    catch { case _: Exception => None }
+    catch { case e: AnalysisException if e.getCondition == "TABLE_OR_VIEW_NOT_FOUND" => None }
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     case agg @ Aggregate(groups, aggExprs, child, _) =>
@@ -454,7 +469,32 @@ class RollupRewrite(
       rollupAttr.get(n).filter(h =>
         newAggExprs.flatten.exists(_.references.exists(_.exprId == h.exprId))))
     val child = Project(pulled.map(_._2) ++ measures ++ extraKeys ++ usedOptional, filtered)
-    Some(Aggregate(newGroups, newAggExprs.map(_.get), child))
+    val outputs = newAggExprs.map(_.get)
+    // same grain: the groups are the level's own key, so every group is one
+    // stored row (the lattice's one-row-per-key contract, see install) and
+    // the aggregate is a projection of it — no shuffle
+    val grain = pulled.map(_._2).collect { case Alias(a: AttributeReference, _) => a.exprId }
+    val sameGrain = grain.length == pulled.length &&
+      grain.toSet == ServedKeys.map(rollupAttr(_).exprId)
+    val oneRow = outputs.map(atOneRow)
+    if (sameGrain && oneRow.forall(_.isDefined)) Some(Project(oneRow.flatten, child))
+    else Some(Aggregate(newGroups, outputs, child))
+  }
+
+  /** An output of the rewritten aggregate evaluated on a group of ONE row:
+    * `sum(c)` is `c` at sum's result type (null stays null), `min(c)` and
+    * `max(c)` are `c`; `coalesce(sum(cnt), 0)` and the avg guard follow from
+    * the sum case. None when any other aggregate remains (count-distinct,
+    * HLL, the sketch merge) — those keep the Aggregate.
+    */
+  private def atOneRow(ne: NamedExpression): Option[NamedExpression] = {
+    val out = ne.transformDown {
+      case AggregateExpression(s: Sum, Complete, false, None, _) => Cast(s.child, s.dataType)
+      case AggregateExpression(Min(c), Complete, false, None, _) => c
+      case AggregateExpression(Max(c), Complete, false, None, _) => c
+    }
+    if (out.exists(_.isInstanceOf[AggregateExpression])) None
+    else Some(out.asInstanceOf[NamedExpression])
   }
 
   // Count over empty input is 0, but Sum is NULL — reachable for a global
@@ -1075,6 +1115,11 @@ object RollupRewrite {
     * dashboard tile reads the 60 s table while `epoch_s div 5` buckets keep
     * reading the 1 s table — Druid's multi-granularity serving as one
     * Catalyst rule.
+    *
+    * Contract: every level holds ONE row per (epoch_s, house_id,
+    * appliance_id, appliance_name), as [[graft.sources.RollupTable]]
+    * writes it, whole and by increment. The same-grain projection relies on
+    * it: a table with repeated keys must not be installed as a level.
     */
   def install(
       spark: SparkSession,

@@ -22,7 +22,10 @@ object RollupTable {
 
   /** Build and persist the rollup, partitioned by (date, hour). Keeps BOTH
     * the exact decimal sum (re-aggregation and the RollupRewrite rule stay
-    * exact) and its double rendering (presentation queries).
+    * exact) and its double rendering (presentation queries). Writes ONE row
+    * per (epoch_s, house_id, appliance_id, appliance_name) — the contract
+    * [[graft.plans.RollupRewrite.install]] serves under, which
+    * [[materializeIncrement]] keeps by replacing whole hour segments.
     */
   def materialize(spark: SparkSession, sfDir: String, outPath: String): Unit =
     writeSegmented(Grid.rollup1s(spark, sfDir, withHist = true), outPath)
@@ -49,7 +52,10 @@ object RollupTable {
     * measure set (every output is a function of finer-level aggregates, never
     * raw rows), which is what makes the lattice exact at any composition of
     * granularities — and what `q_rollup_60s`'s DuckDB oracle pins by grouping
-    * the raw events at the minute directly.
+    * the raw events at the minute directly. Groups on the full key, so the
+    * level keeps ONE row per (g-floored epoch_s, house_id, appliance_id,
+    * appliance_name) — the contract [[graft.plans.RollupRewrite.install]]
+    * serves under.
     */
   def coarsen(rollup: DataFrame, granularitySec: Long): DataFrame = {
     val base = Seq(

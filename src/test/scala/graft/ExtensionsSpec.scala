@@ -187,6 +187,30 @@ class ExtensionsSpec extends AnyFunSuite with SharedSpark {
     } finally graft.plans.RollupRewrite.uninstall(s)
   }
 
+  test("every lattice level keeps one row per key through open and repeated maintain") {
+    // the contract RollupRewrite's same-grain projection serves under: a
+    // group on (epoch_s, house_id, appliance_id, appliance_name) is ONE row
+    val dir = java.nio.file.Files.createTempDirectory("open_unique").toString + "/r"
+    val s = GraftSession.open(sfDir, dir, coarseGranularities = Seq(60L))
+    val levels = Seq(dir, s"${dir}_60s")
+    def assertUnique(when: String): Unit = levels.foreach { p =>
+      val level = s.read.parquet(p)
+      val rows = level.count()
+      val keys = level.select("epoch_s", "house_id", "appliance_id", "appliance_name")
+        .distinct().count()
+      assert(rows > 0 && rows == keys, s"$when: $p holds $rows rows for $keys keys")
+    }
+    try {
+      assertUnique("after open")
+      val lastHour = s.sql("SELECT max((epoch_s div 3600) * 3600) FROM power")
+        .collect().head.getLong(0)
+      GraftSession.maintain(s, sfDir, dir, lastHour)
+      assertUnique("after maintain")
+      GraftSession.maintain(s, sfDir, dir, lastHour)
+      assertUnique("after a second maintain at the same boundary")
+    } finally graft.plans.RollupRewrite.uninstall(s)
+  }
+
   test("GraftSession.open materializes and serves a rollup lattice") {
     val dir = java.nio.file.Files.createTempDirectory("open_lat").toString + "/r"
     // 300 s derives from the 60 s level (60 | 300), both from the 1 s table

@@ -2,16 +2,17 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{Attribute, CreateArray, Literal, StringReplace}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Sort}
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.{LogicalRDD, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.aggregate.HashAggregateExec
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, HashAggregateExec}
+import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
 import org.apache.spark.sql.types.LongType
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Relational
+import graft.operators.{Dashboard, Relational}
 import graft.text.TextOps
 
 /** Plan-shape invariants for the settled plan decisions: each measured win
@@ -103,5 +104,35 @@ class PlanShapeSpec extends AnyFunSuite with SharedSpark with AdaptiveSparkPlanH
       })
     }.flatten
     assert(preagg.nonEmpty, s"no HashAggregate on l_orderkey below a join:\n$plan")
+  }
+
+  test("routed dashboard tiles plan one shuffle: no view sort, no same-grain re-aggregation") {
+    // a view that kept its catalog ORDER BY added a range exchange and a
+    // Sort under every tile; a same-grain rollup read kept a second Aggregate
+    // and its hash exchange. Both gone: a routed tile is scan, aggregate,
+    // one shuffle.
+    val dir = java.nio.file.Files.createTempDirectory("shape_lattice").toString + "/r"
+    val s = GraftSession.open(sfDir, dir)
+    try {
+      Dashboard.registerViews(s, sfDir)
+      Seq("powerraw", "dutycycle", "history").foreach { v =>
+        val plan = s.table(v).queryExecution.analyzed
+        assert(plan.collect { case o: Sort => o }.isEmpty, s"view $v keeps a Sort:\n$plan")
+      }
+      Seq("total_power", "top10_appliance_names", "top10_houses", "top10_appliances").foreach { t =>
+        val plan = s.sql(Dashboard.tiles(t)).queryExecution.executedPlan
+        val exchanges = collectWithSubqueries(plan) { case e: Exchange => e }
+        assert(exchanges.size == 1, s"$t: ${exchanges.size} exchanges:\n$plan")
+        val ranged = collectWithSubqueries(plan) {
+          case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+        }
+        assert(ranged.isEmpty, s"$t: range exchange:\n$plan")
+        val finalAgg = collectFirst(plan) { case a: BaseAggregateExec => a }
+        assert(finalAgg.isDefined, s"$t: no aggregate:\n$plan")
+        assert(collect(finalAgg.get) { case o: SortExec => o }.isEmpty,
+          s"$t: Sort below the final aggregate:\n$plan")
+        assert(plan.toString.contains("sum_power_dec"), s"$t is not routed:\n$plan")
+      }
+    } finally graft.plans.RollupRewrite.uninstall(s)
   }
 }

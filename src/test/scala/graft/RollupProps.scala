@@ -2,6 +2,8 @@ package graft
 
 import org.scalacheck.{Gen, Properties, Test}
 import org.scalacheck.Prop.forAll
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
+import org.apache.spark.sql.catalyst.plans.logical.Aggregate
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 
@@ -33,9 +35,13 @@ object RollupProps extends Properties("rollup") {
 
   private def raw = Grid.powerReadings(spark, sfDir)
 
-  private val genGroup: Gen[List[String]] = Gen.someOf(
-    List("house_id", "appliance_name", "epoch_s div 10", "epoch_s div 60")
-  ).map(_.toList)
+  /** The lattice's own key: a group on it is one stored 1 s row. */
+  private val FullKey = List("epoch_s", "house_id", "appliance_id", "appliance_name")
+
+  private val genGroup: Gen[List[String]] = Gen.oneOf(
+    Gen.someOf(List("house_id", "appliance_name", "epoch_s div 10", "epoch_s div 60"))
+      .map(_.toList),
+    Gen.const(FullKey))
 
   // exactly one distinct-set candidate: the rule serves at most one distinct
   // argument-set per aggregate (post-RewriteDistinctAggregates planability),
@@ -64,8 +70,9 @@ object RollupProps extends Properties("rollup") {
     Some(col("epoch_s") >= 1704067200L && col("epoch_s") < 1704070000L),
     Some(expr("epoch_s div 3600") % 2 === 0))
 
-  private def build(groups: List[String], aggs: List[Column], f: Option[Column]): DataFrame = {
-    val base = f.fold(raw)(raw.filter)
+  private def build(
+      src: DataFrame, groups: List[String], aggs: List[Column], f: Option[Column]): DataFrame = {
+    val base = f.fold(src)(src.filter)
     val df = if (groups.isEmpty) base.agg(aggs.head, aggs.tail: _*)
     else base.groupBy(groups.map(expr): _*).agg(aggs.head, aggs.tail: _*)
     df.orderBy(df.columns.map(col).toSeq: _*)
@@ -97,11 +104,11 @@ object RollupProps extends Properties("rollup") {
     forAll(genGroup, genAggs, genFilter) { (groups, aggs, f) =>
       RollupRewrite.install(spark, rollupDir, raw)
       try {
-        val q = build(groups, aggs, f)
+        val q = build(raw, groups, aggs, f)
         val isRouted = routed(q)
         val viaRollup = cells(q)
         RollupRewrite.uninstall(spark)
-        val direct = cells(build(groups, aggs, f))
+        val direct = cells(build(raw, groups, aggs, f))
         isRouted && sameCells(viaRollup, direct)
       } finally RollupRewrite.uninstall(spark)
     }
@@ -137,15 +144,109 @@ object RollupProps extends Properties("rollup") {
       case ((groups, groupsMinute), aggs, (f, filterMinute)) =>
         RollupRewrite.install(spark, rollupDir, raw, Seq((coarseDir, 60L)))
         try {
-          val q = build(groups, aggs, f)
+          val q = build(raw, groups, aggs, f)
           val isRouted = routed(q)
           val scansCoarse = q.queryExecution.executedPlan.toString
             .contains(new java.io.File(coarseDir).getName)
           val viaRollup = cells(q)
           RollupRewrite.uninstall(spark)
-          val direct = cells(build(groups, aggs, f))
+          val direct = cells(build(raw, groups, aggs, f))
           isRouted && sameCells(viaRollup, direct) &&
             scansCoarse == (groupsMinute && filterMinute)
         } finally RollupRewrite.uninstall(spark)
     }
+
+  // ---- same grain: groups on the full key read the 1 s level as a
+  // projection. The fixture plants an appliance whose readings in one second
+  // are all null (sum, min and max must be null, as on raw) and a second
+  // mixing a null with a value.
+
+  private val PlantedAppliance = "1_1_1_1000001"
+
+  private lazy val plantedDir: String = {
+    import java.nio.file.{Files, Paths}
+    val dir = Files.createTempDirectory("props_planted").toString
+    val events = graft.Tables.events(spark, sfDir) // ts as epoch-ns long
+    val t0 = 1704103200L * 1000000000L // 2024-01-01T10:00:00Z
+    val planted = spark.createDataFrame(Seq[(Long, Long, Long, String, Option[Double], String)](
+      (2000001L, t0 + 100000000L, 1000001L, "reading", None, "{}"),
+      (2000002L, t0 + 600000000L, 1000001L, "reading", None, "{}"),
+      (2000003L, t0 + 5000000000L, 1000001L, "reading", None, "{}"),
+      (2000004L, t0 + 5200000000L, 1000001L, "reading", Some(2.5), "{}")
+    )).toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+    events.unionByName(planted).write.parquet(Paths.get(dir, "events.parquet").toString)
+    dir
+  }
+
+  private lazy val plantedRollupDir: String = {
+    val dir = java.nio.file.Files.createTempDirectory("props_planted_rollup").toString
+    RollupTable.materialize(spark, plantedDir, dir)
+    dir
+  }
+
+  private def plantedRaw = Grid.powerReadings(spark, plantedDir)
+
+  private def aggregates(df: DataFrame): Int =
+    df.queryExecution.optimizedPlan.collect { case a: Aggregate => a }.size
+
+  private def hasDistinct(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.collect { case a: Aggregate => a }.exists(
+      _.aggregateExpressions.exists(_.exists {
+        case ae: AggregateExpression => ae.isDistinct
+        case _ => false
+      }))
+
+  /** Run `q` routed over the planted lattice, then unrouted. */
+  private def plantedRun(q: => DataFrame): (DataFrame, Seq[Seq[Any]], Seq[Seq[Any]]) = {
+    RollupRewrite.install(spark, plantedRollupDir, plantedRaw)
+    try {
+      val routedQ = q
+      val viaRollup = cells(routedQ)
+      RollupRewrite.uninstall(spark)
+      (routedQ, viaRollup, cells(q))
+    } finally RollupRewrite.uninstall(spark)
+  }
+
+  private val genKeys: Gen[List[String]] =
+    Gen.oneOf(Gen.const(FullKey), Gen.someOf(FullKey).map(_.toList))
+
+  property("key groups read the 1 s level as a projection exactly at the full key") =
+    forAll(genKeys, genAggs, genFilter) { (keys, aggs, f) =>
+      val (q, viaRollup, direct) = plantedRun(build(plantedRaw, keys, aggs, f))
+      // a group is one stored row only on the full key; count-distinct
+      // keeps the Aggregate there too
+      val projects = keys.toSet == FullKey.toSet && !hasDistinct(q)
+      routed(q) && aggregates(q) == (if (projects) 0 else 1) && sameCells(viaRollup, direct)
+    }
+
+  private val genOuter: Gen[List[String]] = Gen.someOf(
+    List("house_id", "appliance_id", "appliance_name", "epoch_s div 5")).map(_.toList)
+
+  property("a tile over the unsorted powerraw view aggregates once") =
+    forAll(genOuter, genFilter) { (outer, f) =>
+      val aggs = List(sum("sum_power").as("p"), sum("cnt").as("n"), max("cnt").as("mx"))
+      val (q, viaRollup, direct) = plantedRun(
+        build(Grid.rollup1sView(spark, plantedDir), outer, aggs, f))
+      routed(q) && aggregates(q) == 1 && sameCells(viaRollup, direct)
+    }
+
+  property("an all-null group projects null sum, min and max, as on raw") = {
+    val (q, viaRollup, direct) = plantedRun(
+      plantedRaw.filter(col("appliance_id") === PlantedAppliance)
+        .groupBy(FullKey.map(col): _*)
+        .agg(sum("power").as("p"), min("power").as("mn"), max("power").as("mx"),
+          count("power").as("c"), avg("power").as("av"), Grid.dsum(col("power")).as("dsp"))
+        .orderBy("epoch_s"))
+    val allNull = viaRollup.headOption.map(_.drop(4))
+    routed(q) && aggregates(q) == 0 && viaRollup.length == 2 && viaRollup == direct &&
+      allNull.contains(Seq(null, null, null, 0L, null, null))
+  }
+
+  property("a full-key count-distinct routes through the Aggregate") = {
+    val (q, viaRollup, direct) = plantedRun(
+      plantedRaw.groupBy(FullKey.map(col): _*)
+        .agg(countDistinct(col("house_id")).as("nd"), sum("power").as("p"))
+        .orderBy(FullKey.map(col): _*))
+    routed(q) && aggregates(q) == 1 && viaRollup.nonEmpty && sameCells(viaRollup, direct)
+  }
 }

@@ -550,6 +550,39 @@ class RollupRewriteSpec extends AnyFunSuite with SharedSpark {
     } finally RollupRewrite.uninstall(spark)
   }
 
+  test("a dropped lattice view falls through to the next level, then to raw") {
+    val coarseDir = java.nio.file.Files.createTempDirectory("rw_rollup_60s_drop").toString
+    RollupTable.materializeCoarse(spark, rollupDir, coarseDir, 60L)
+    RollupRewrite.install(spark, rollupDir, raw, Seq((coarseDir, 60L)))
+    def tile = raw.groupBy((expr("epoch_s div 60") * 60).as("m"))
+      .agg(count(lit(1)).as("n"), sum("power").as("p")).orderBy("m")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    try {
+      val expected = { RollupRewrite.uninstall(spark); rows(tile) }
+      RollupRewrite.install(spark, rollupDir, raw, Seq((coarseDir, 60L)))
+      def close(got: Seq[(Long, Long, Double)]): Unit = {
+        assert(got.map(t => (t._1, t._2)) == expected.map(t => (t._1, t._2)))
+        got.zip(expected).foreach { case (a, b) =>
+          assert(math.abs(a._3 - b._3) <= 1e-9 * math.max(1.0, math.abs(b._3)), s"$a vs $b")
+        }
+      }
+      assert(tile.queryExecution.executedPlan.toString.contains(new java.io.File(coarseDir).getName))
+      // a missing view means "this level does not route", never an error
+      spark.catalog.dropTempView(RollupRewrite.viewName(60L))
+      val fine = tile
+      assert(routed(fine) &&
+        !fine.queryExecution.executedPlan.toString.contains(new java.io.File(coarseDir).getName),
+        s"without the 60 s view the tile must read the 1 s level:\n${fine.queryExecution.optimizedPlan}")
+      close(rows(fine))
+      spark.catalog.dropTempView(RollupRewrite.RollupViewName)
+      val onRaw = tile
+      assert(onRaw.queryExecution.optimizedPlan.toString.contains("user_id"),
+        s"without any lattice view the tile must read raw:\n${onRaw.queryExecution.optimizedPlan}")
+      close(rows(onRaw))
+    } finally RollupRewrite.uninstall(spark)
+  }
+
   test("percentile_approx(power) serves from the histogram sketch lattice (VERDICT r5 #2)") {
     val coarseDir = java.nio.file.Files.createTempDirectory("rw_rollup_60s_hist").toString
     RollupTable.materializeCoarse(spark, rollupDir, coarseDir, 60L)
