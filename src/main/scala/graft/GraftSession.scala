@@ -21,6 +21,19 @@ import org.apache.spark.sql.SparkSession
   * then fixes the count for the life of the query, so it must be right when
   * the query first starts. Nothing in the engine assumes single-JVM
   * execution.
+  *
+  * The `file` scheme is served by [[sources.NioLocalFileSystem]] (FileSystem
+  * API) and [[sources.NioLocalFs]] (FileContext API). Without Hadoop's
+  * native library the stock local filesystem forks `chmod` for every file it
+  * writes and `readlink` about eight times per checkpoint rename: one 8 s
+  * pipeline-bench `ingest` run on 4 cores started 3,110 processes (2,112
+  * `readlink`, 996 `chmod`, on checkpoint, segment and duty-sink files), and
+  * each stream's offset-log commit took ~70 ms instead of ~4 ms. The
+  * replacement does the same chmod and link lookup in-process; files, `.crc`
+  * siblings and rename semantics are unchanged, and other schemes keep their
+  * own filesystems. The confs go on the `SparkConf` before the context
+  * starts because Hadoop caches one filesystem per scheme whatever its
+  * class: a conf set on a running context would not reach the cached one.
   */
 object GraftSession {
 
@@ -41,6 +54,8 @@ object GraftSession {
       // joins) arrives the way any Spark library's does: through
       // SparkSessionExtensions. A cluster deployment passes the same conf.
       .set("spark.sql.extensions", classOf[GraftExtensions].getName)
+      .set("spark.hadoop.fs.file.impl", classOf[sources.NioLocalFileSystem].getName)
+      .set("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[sources.NioLocalFs].getName)
       .set("spark.sql.session.timeZone", "UTC")
       .set("spark.ui.enabled", "false")
       .set("spark.sql.adaptive.enabled", "true")

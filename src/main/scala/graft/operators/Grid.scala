@@ -625,7 +625,7 @@ object Grid {
     * second aggregate on the same Catalyst plan.
     */
   def dutySumByAppliance(spark: SparkSession, sfDir: String): DataFrame =
-    dutyCycle(spark, sfDir)
+    dutyCycleView(spark, sfDir)
       .filter(col("house_id") === "1_1_0")
       .groupBy("appliance_id")
       .agg(

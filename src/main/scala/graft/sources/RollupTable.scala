@@ -16,7 +16,11 @@ import graft.operators.Grid
   * with a time predicate prunes partitions at planning time. The streaming
   * writer is [[streamingWriter]] over `StreamingDutyCycle.rollupPlanFull`
   * (one replay-safe segment per micro-batch) with periodic compaction; the
-  * batch twin [[materialize]] builds the identical measure set.
+  * batch twin [[materialize]] builds the identical measure set. On local
+  * disk, segment and checkpoint files and their `.crc` siblings land
+  * through the `file` scheme [[graft.GraftSession]] installs
+  * ([[NioLocalFileSystem]], [[NioLocalFs]]), which sets their modes without
+  * forking a `chmod` per file.
   */
 object RollupTable {
 

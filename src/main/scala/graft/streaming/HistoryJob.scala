@@ -18,10 +18,12 @@ object HistoryJob {
 
   /** One run of the history query as keyed JSON records. Field order matches
     * the reference's spliced output (`druid_batch.py:110-113`: row fields then
-    * the appended job timestamp).
+    * the appended job timestamp). Records come in no particular order: the
+    * topic is keyed, and no reader keeps arrival order, so the job plans no
+    * sort.
     */
   def run(spark: SparkSession, sfDir: String, jobTimeMillis: Long): DataFrame =
-    Grid.historyAvg(spark, sfDir)
+    Grid.historyAvgView(spark, sfDir)
       .withColumn("timestamp", lit(jobTimeMillis))
       .select(
         col("house_id").as("key"),

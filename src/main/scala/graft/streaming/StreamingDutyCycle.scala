@@ -18,9 +18,14 @@ import org.apache.spark.sql.functions._
   * partition — not raw readings. State is bounded by the watermark (T1).
   * The engine sets no state-store provider, so queries run on Spark's
   * default HDFS-backed store (state in executor memory, delta files in the
-  * checkpoint); a deployment that needs bounded memory at 10k+ appliances ×
-  * 5 live windows sets `spark.sql.streaming.stateStore.providerClass` to
-  * RocksDB, and ScaleSpec/RecoverySpec run the same plans on it.
+  * checkpoint). On a local checkpoint each trigger writes a delta file and
+  * its `.crc` per shuffle partition, plus offset and commit log entries;
+  * the `file` scheme [[graft.GraftSession]] installs writes and renames them
+  * in-process, where Hadoop's stock local filesystem forked a `chmod` per
+  * file and a `readlink` per link lookup. A deployment that needs bounded
+  * memory at 10k+ appliances × 5 live windows sets
+  * `spark.sql.streaming.stateStore.providerClass` to RocksDB, and
+  * ScaleSpec/RecoverySpec run the same plans on it.
   */
 object StreamingDutyCycle {
 

@@ -106,6 +106,16 @@ class PlanShapeSpec extends AnyFunSuite with SharedSpark with AdaptiveSparkPlanH
     assert(preagg.nonEmpty, s"no HashAggregate on l_orderkey below a join:\n$plan")
   }
 
+  test("the history job plans no sort: its keyed records keep no order") {
+    val plan = physical(graft.streaming.HistoryJob.run(spark, sfDir, 1L))
+    val sorts = collectWithSubqueries(plan) { case o: SortExec => o }
+    val ranged = collectWithSubqueries(plan) {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+    }
+    assert(sorts.isEmpty && ranged.isEmpty,
+      s"${sorts.size} sorts, ${ranged.size} range exchanges:\n$plan")
+  }
+
   test("routed dashboard tiles plan one shuffle: no view sort, no same-grain re-aggregation") {
     // a view that kept its catalog ORDER BY added a range exchange and a
     // Sort under every tile; a same-grain rollup read kept a second Aggregate

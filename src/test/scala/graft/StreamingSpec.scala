@@ -467,6 +467,7 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
       tried += measure(tried.size)
       if (!tried.lastOption.exists(_ > minRate)) tried += measure(tried.size)
     }
+    info(f"$label: ${tried.map(r => f"$r%.0f").mkString(", ")}/s (gate ${minRate}%.0f/s)")
     assert(tried.last > minRate,
       f"$label sustained only ${tried.max}%.0f/s over ${tried.size} attempts (gate ${minRate}%.0f/s)")
   }
