@@ -1,8 +1,12 @@
 package graft
 
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import scala.util.Try
 import scala.util.control.NonFatal
+
+import CatalogBench.{bestOfTwo, secs}
 
 /** Benchmark main: runs every declared query on SPARK_GRAFT_SF_DIR and prints
   * one JSON line. A warm-up pass (table footers + a small shuffle/join) runs
@@ -17,12 +21,14 @@ import scala.util.control.NonFatal
   * serving legs, attribution objects) is written to /tmp/bench_last.json and
   * /tmp/bench_last_c$cpus.json (per-leg, so a 32- and an 8-core run in the
   * same session don't clobber each other).
+  *
+  * Each measured section (streaming, rollup_serving, index_serving, …, and
+  * the nested legs that fail on their own) is a named value run by
+  * [[section]]: a NonFatal failure renders `{"error": …}` under that
+  * section's key and costs only that section. Every timed region goes
+  * through [[CatalogBench.timed]]; both documents are written by [[Json]].
   */
 object Bench {
-
-  /** JSON-safe rendering of a failure for error-marker fields. */
-  private def jsonErr(t: Throwable): String =
-    String.valueOf(t).replaceAll("""[\\"\n\r\t]""", " ").take(200)
 
   /** `embeddings` × factor with disjoint vec_ids — the shared 10× fixture
     * shape of the mega-cell and grow-K legs (one id-shift constant, one
@@ -35,6 +41,24 @@ object Bench {
       .withColumn("vec_id", col("vec_id") + col("rep") * lit(10000000L))
       .drop("rep")
   }
+
+  /** Runs the bench section `name`. A NonFatal failure becomes the section's
+    * value, which [[Json]] renders as `{"error": …}` under the section's key;
+    * it is reported on stderr and costs only this section, never the ones
+    * after it.
+    */
+  private[graft] def section[A](name: String)(body: => A): Try[A] = {
+    val r = Try(body)
+    r.failed.foreach(t => System.err.println(s"[bench] $name FAILED: $t"))
+    r
+  }
+
+  /** One probe row: its ratio, its member of the section's `"queries"`
+    * object, and the self-contained attribution object the summary lifts for
+    * the worst row.
+    */
+  private final case class ProbeRow(name: String, ratio: Double, detail: ObjectNode,
+      attrib: ObjectNode)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -56,13 +80,7 @@ object Bench {
       java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
     def sentinelSec(): Double = {
       import org.apache.spark.sql.functions._
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        spark.range(200L * 1000 * 1000)
-          .select(sum(col("id") % 7)).head()
-        (System.nanoTime() - t0) / 1e9
-      }
-      math.min(once(), once())
+      bestOfTwo(spark.range(200L * 1000 * 1000).select(sum(col("id") % 7)).head())
     }
     val loadAvgStart = loadAvg()
     val sentinelStartSec = sentinelSec()
@@ -74,19 +92,17 @@ object Bench {
     // as -1.0 and surface in a top-level "errors" object.
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val results = CatalogBench.timeCatalog(spark, sfDir, SparkEntry.queries.keys.toSeq) {
-      (name, t) => errors(name) = jsonErr(t)
+      (name, t) => errors(name) = Json.errorText(t)
     }
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
     val total = catalogTotal(results)
     val base = results.toMap
 
     // min-of-two timing of a probe plan; -1.0 sentinel on failure so a query
     // failing against the probe tables never reads as a great ratio
-    def timed(fn: (SparkSession, String) => DataFrame, dir: String): Double =
+    def timedMin(fn: (SparkSession, String) => DataFrame, dir: String): Double =
       CatalogBench.minOfTwo(
         CatalogBench.timeOnce(spark, dir, fn)(), CatalogBench.timeOnce(spark, dir, fn)())
-    // A probe measurement: ratio + the per-query JSON fragment + a compact
+    // A probe measurement: ratio + the per-query JSON member + a compact
     // self-contained attribution object the SUMMARY lifts for its worst rows
     // (VERDICT r11 #5: the driver's artifact capture truncates the detailed
     // probe sections, so two rounds of published worst_skew_ratio 11–17
@@ -102,11 +118,9 @@ object Bench {
     // genuine superlinearity)
     def timedAttempts(fn: (SparkSession, String) => DataFrame, dir: String): Seq[Double] =
       Seq(CatalogBench.timeOnce(spark, dir, fn)(), CatalogBench.timeOnce(spark, dir, fn)())
-    def jsonArr(xs: Seq[Double]): String =
-      xs.map(x => f"$x%.4f").mkString("[", ",", "]")
     def probeRowVs(name: String, b: Double, dir: String,
-        fn: (SparkSession, String) => DataFrame, extra: String = "",
-        fresh: Option[((SparkSession, String) => DataFrame, String)] = None): (Double, String, String) = {
+        fn: (SparkSession, String) => DataFrame, extra: Seq[(String, Any)] = Nil,
+        fresh: Option[((SparkSession, String) => DataFrame, String)] = None): ProbeRow = {
       val attempts0 = timedAttempts(fn, dir)
       val first =
         if (attempts0.exists(_ < 0)) -1.0 else attempts0.min
@@ -141,10 +155,10 @@ object Bench {
       // worst_skew_ratio 11.34 with only run-START contention samples, so
       // the stall-vs-superlinear call could not be made from the artifact
       val rowSentinel = sentinel1
-      val attemptsJson =
-        if (!retried) ""
-        else s""","scaled_attempt_secs":${jsonArr(attempts0 ++ attempts1)},""" +
-          s""""scaled_adjacent_sentinel_secs":${jsonArr(Seq(sentinel0, sentinel1))}"""
+      val attemptsJson: Seq[(String, Any)] =
+        if (!retried) Nil
+        else Seq("scaled_attempt_secs" -> (attempts0 ++ attempts1).map(roundTo(_, 4)),
+          "scaled_adjacent_sentinel_secs" -> Seq(sentinel0, sentinel1).map(roundTo(_, 4)))
       // FRESH-BASE re-measurement (VERDICT r12 #1, the final attribution
       // hole): the base above was timed during the catalog pass, minutes
       // earlier under DIFFERENT load — a run-wide contention shift inflates
@@ -156,7 +170,7 @@ object Bench {
       // in the attribution for the audit trail.
       val freshAttempted = fresh.nonEmpty && staleRatio > 10.0
       val freshBase = fresh match {
-        case Some((bfn, bdir)) if staleRatio > 10.0 => timed(bfn, bdir)
+        case Some((bfn, bdir)) if staleRatio > 10.0 => timedMin(bfn, bdir)
         case _ => -1.0
       }
       val ratio = if (freshBase > 0 && scaled >= 0) scaled / freshBase else staleRatio
@@ -169,37 +183,35 @@ object Bench {
       // for — fresh_base_failed marks "the number you see is stale because
       // the fresh attempt could not complete", not "no attempt was made".
       val pubBase = if (freshBase > 0) freshBase else b
-      val freshJson =
-        if (freshBase > 0)
-          s""","stale_base":$b,"stale_ratio":$staleRatio,"fresh_base_sec":$freshBase"""
-        else if (freshAttempted) s""","fresh_base_failed":true"""
-        else ""
-      val attribution =
+      val freshAttrib: Seq[(String, Any)] =
+        if (freshBase > 0) Seq("stale_ratio" -> staleRatio, "fresh_base_sec" -> freshBase)
+        else if (freshAttempted) Seq("fresh_base_failed" -> true)
+        else Nil
+      val freshJson = if (freshBase > 0) ("stale_base" -> b) +: freshAttrib else freshAttrib
+      val attribution: Seq[(String, Any)] =
         if (staleRatio > 10.0)
-          s""","retried":$retried,"stall_sentinel_sec":$rowSentinel$attemptsJson$freshJson"""
-        else if (retried) s""","retried":true$attemptsJson"""
-        else ""
-      (ratio,
-        s""""$name":{"base":$pubBase,"scaled":$scaled,"ratio":$ratio$attribution$extra}""",
-        s"""{"query":"$name","ratio":$ratio,"retried":$retried,"row_sentinel_sec":$rowSentinel$attemptsJson""" +
-          (if (freshBase > 0) s""","stale_ratio":$staleRatio,"fresh_base_sec":$freshBase}"""
-          else if (freshAttempted) s""","fresh_base_failed":true}"""
-          else "}"))
+          Seq("retried" -> retried, "stall_sentinel_sec" -> rowSentinel) ++ attemptsJson ++ freshJson
+        else if (retried) ("retried" -> true) +: attemptsJson
+        else Nil
+      ProbeRow(name, ratio,
+        Json.obj(Seq("base" -> pubBase, "scaled" -> scaled, "ratio" -> ratio) ++
+          attribution ++ extra: _*),
+        Json.obj(Seq("query" -> name, "ratio" -> ratio, "retried" -> retried,
+          "row_sentinel_sec" -> rowSentinel) ++ attemptsJson ++ freshAttrib: _*))
     }
     def probeRow(name: String, baseName: String, dir: String,
-        fn: (SparkSession, String) => DataFrame, extra: String = ""): (Double, String, String) =
+        fn: (SparkSession, String) => DataFrame, extra: Seq[(String, Any)] = Nil): ProbeRow =
       probeRowVs(name, base.getOrElse(baseName, -1.0), dir, fn, extra,
         fresh = SparkEntry.queries.get(baseName).map(f => (f, sfDir)))
-    // the worst surviving row's attribution object (JSON null when a section
-    // had no measurable rows, e.g. after a section-level failure)
-    def worstAttrib(rows: Seq[(Double, String, String)]): String =
-      rows.filter(_._1 >= 0).sortBy(-_._1).headOption.map(_._3).getOrElse("null")
-    // the bare query NAME of the worst row, for consumers that want a flat
-    // string key next to the structured attrib object
-    def worstName(rows: Seq[(Double, String, String)]): String =
-      rows.filter(_._1 >= 0).sortBy(-_._1).headOption
-        .map(_._2.split("\":", 2).head.stripPrefix("\""))
-        .map(n => s""""$n"""").getOrElse("null")
+    def worstRatio(rows: Seq[ProbeRow]): Double =
+      rows.map(_.ratio).filterNot(_ < 0).foldLeft(0.0)(math.max)
+    // the worst surviving row (none when a section had no measurable rows,
+    // e.g. after a section-level failure): the summary carries its
+    // attribution object and, for consumers that want a flat string key
+    // next to it, its bare query NAME
+    def worstRow(rows: Seq[ProbeRow]): Option[ProbeRow] =
+      rows.filter(_.ratio >= 0).maxByOption(_.ratio)
+    def queriesObj(rows: Seq[ProbeRow]): Seq[(String, Any)] = rows.map(r => r.name -> r.detail)
     def cleanup(dir: String): Unit = {
       import scala.reflect.io.Directory
       new Directory(new java.io.File(dir)).deleteRecursively(); ()
@@ -210,8 +222,10 @@ object Bench {
     // shuffles and aggregation state actually grow). time(10×)/time(1×) well
     // under 10 on idle cores = the plan scales with partitions, not the
     // driver; a ratio ≥ 10 would flag a serialization point.
+    // Value: (scale_probe object, the uniform rows, the two-sided row's
+    // per-unit ratio, the ivf_index_scale leg).
     val factor = 10
-    val (probeJson, probeWorst, probeTwoSidedPerUnit, probeWorstAttrib, probeWorstQuery) = try {
+    val scaleProbe = section("scale_probe") {
       import org.apache.spark.sql.functions._
       val probeDir = java.nio.file.Files.createTempDirectory("graft_scale").toString
       Tables.events(spark, sfDir)
@@ -283,7 +297,7 @@ object Bench {
       // headline read as a superlinear plan that doesn't exist (VERDICT r4).
       val twoSided = probeRow("q_pq_adc_topk_bothsides", "q_pq_adc_topk", probeDir,
         (s, d) => graft.ann.SimilarityOps.pqAdcTopK(s, d, nQueries = 100),
-        extra = s""","work_factor":${factor * factor}""")
+        extra = Seq("work_factor" -> factor * factor))
       // Hamming self-join with a FIXED 256-value band alphabet is O(n²/256)
       // by design — at 10× rows the in-bucket candidate space grows 100×, so
       // this is a two-sided-style row (per-unit bar, not the uniform max).
@@ -291,7 +305,7 @@ object Bench {
       // a different join shape.
       val imageFixedBands = probeRow("q_image_neardup_fixedbands", "q_image_neardup",
         probeDir, graft.multimodal.MediaOps.imageNearDup(_, _),
-        extra = s""","work_factor":${factor * factor}""")
+        extra = Seq("work_factor" -> factor * factor))
       // The wide (256-bit, 16-bit-band) variant's in-bucket candidate space
       // stays ~flat at 10×: 2^16 buckets/band absorb the corpus growth the
       // fixed 256-value alphabet cannot. Its ratio should sit measurably
@@ -299,7 +313,7 @@ object Bench {
       // demonstrated rather than asserted.
       val imageWideBands = probeRow("q_image_neardup_wideband", "q_image_neardup_wideband",
         probeDir, graft.multimodal.MediaOps.imageNearDupWideband(_, _),
-        extra = s""","work_factor":${factor * factor}""")
+        extra = Seq("work_factor" -> factor * factor))
       // Durable-index probe at 10×: float vs raw-ADC vs residual-ADC search
       // against the SAME stored index. At 1× (index_serving below) the float
       // probe wins — ADC's LUT/window overhead dominates a 6k-vector corpus.
@@ -307,15 +321,9 @@ object Bench {
       // where the float scan reads 512 vector bytes per candidate, so as the
       // cells grow 10× the ADC probes' advantage should appear (and keeps
       // growing with the corpus — memory bandwidth is the 100 TB bound).
-      // guarded separately: a failure here must cost only THIS row, never
-      // the already-measured probe rows above or the probeDir cleanup below
-      val ivfIndexScale = try {
-        def t2(run: => Unit): Double = {
-          def once(): Double = {
-            val t0 = System.nanoTime(); run; (System.nanoTime() - t0) / 1e9
-          }
-          math.min(once(), once())
-        }
+      // its own section: a failure here must cost only THIS row, never the
+      // already-measured probe rows above or the probeDir cleanup below
+      val ivfIndexScale = section("ivf_index_scale") {
         // Bytes per probe (VERDICT r10 #2): the ADC claim is a BYTE claim —
         // the code-only candidate scan reads ~3 code bytes where the float
         // scan reads 512 vector bytes per candidate — but local wall-clock
@@ -367,18 +375,18 @@ object Bench {
           .filter(col("vec_id") < 100).select("vec_id", "embedding")
           .coalesce(1).write.mode("overwrite").parquet(s"$probeDir/ivf_queries")
         val qs = spark.read.parquet(s"$probeDir/ivf_queries")
-        val fl = t2(graft.ann.IvfIndex.search(spark, idx, qs, 3, 2).count())
-        val adc = t2(graft.ann.IvfIndex.searchAdc(spark, idx, qs, 3, 2).count())
-        val radc = t2(graft.ann.IvfIndex.searchRadc(spark, idx, qs, 3, 2).count())
+        val fl = bestOfTwo(graft.ann.IvfIndex.search(spark, idx, qs, 3, 2).count())
+        val adc = bestOfTwo(graft.ann.IvfIndex.searchAdc(spark, idx, qs, 3, 2).count())
+        val radc = bestOfTwo(graft.ann.IvfIndex.searchRadc(spark, idx, qs, 3, 2).count())
         // LATE-MATERIALIZATION rerank (VERDICT r13 #3): the pool's ids are
         // collected and pushed into the rerank scan as static IN filters, so
         // only pages holding pooled candidates decode floats — the attack on
         // the "rerank re-decodes whole probed cells" floor. Published beside
         // the plain ratio; whichever reading lands, it is a measurement, not
         // an inference.
-        val adcPushed = t2(graft.ann.IvfIndex.searchAdc(
+        val adcPushed = bestOfTwo(graft.ann.IvfIndex.searchAdc(
           spark, idx, qs, 3, 2, pushRerankIds = true).count())
-        val radcPushed = t2(graft.ann.IvfIndex.searchRadc(
+        val radcPushed = bestOfTwo(graft.ann.IvfIndex.searchRadc(
           spark, idx, qs, 3, 2, pushRerankIds = true).count())
         // wall-clock decomposition (VERDICT r12 #5): the codes-only
         // CANDIDATE phase alone vs the float probe. Locally (page-cached)
@@ -388,7 +396,7 @@ object Bench {
         // where storage bandwidth, not decode, dominates (the byte table's
         // regime below). candidate_phase < float is the decode/byte win
         // made visible at bench scale.
-        val adcCand = t2(graft.ann.IvfIndex.adcCandidates(spark, idx, qs, 2).count())
+        val adcCand = bestOfTwo(graft.ann.IvfIndex.adcCandidates(spark, idx, qs, 2).count())
         // Recall-vs-rerank curve (VERDICT r14 #6): the serving tables price
         // the candidate phase in bytes and wall-clock; this prices the OTHER
         // axis — how much exact rerank buys back the recall the coded
@@ -398,8 +406,9 @@ object Bench {
         // matched (qid, cid) slots / |truth rows| — which equals
         // 3 × |queries| only when every query has 3 neighbors; a query with
         // fewer shrinks numerator and denominator together (ADVICE r15 #4:
-        // the definition here now states the implemented denominator).
-        val recallCurveJson = {
+        // the definition here now states the implemented denominator). No
+        // truth rows make the recall 0/0, which the writer renders as null.
+        val recallCurve = {
           val tRows = graft.ann.IvfIndex.search(spark, idx, qs, 3, 2)
             .select(col("qid").as("tq"), col("cid").as("tc"))
           tRows.cache()
@@ -413,9 +422,9 @@ object Bench {
             tRows.join(ap, col("qid") === col("tq") && col("cid") === col("tc")).count()
           }
           val curve = Seq(1, 10, 30, 100).map { r =>
-            s"""{"rerank":$r,"adc_recall3":${hitsAt("adc", r) / slots},""" +
-              s""""radc_recall3":${hitsAt("radc", r) / slots}}"""
-          }.mkString("[", ",", "]")
+            Json.obj("rerank" -> r, "adc_recall3" -> hitsAt("adc", r) / slots,
+              "radc_recall3" -> hitsAt("radc", r) / slots)
+          }
           tRows.unpersist()
           curve
         }
@@ -430,33 +439,32 @@ object Bench {
         val flB = colB("vec_id") + colB("v") + colB("nn")
         val adcB = colB("vec_id") + colB("pq")
         val radcB = colB("vec_id") + colB("rpq")
-        s""","ivf_index_scale":{"corpus_factor":$factor,"float_probe_sec":$fl,""" +
-          s""""adc_probe_sec":$adc,"radc_probe_sec":$radc,""" +
-          s""""adc_candidate_phase_sec":$adcCand,""" +
-          s""""adc_recall_vs_rerank":$recallCurveJson,""" +
-          s""""adc_candidate_vs_float":${if (fl > 0) adcCand / fl else -1.0},""" +
-          s""""adc_vs_float":${if (fl > 0) adc / fl else -1.0},""" +
-          s""""adc_pushed_probe_sec":$adcPushed,""" +
-          s""""adc_pushed_vs_float":${if (fl > 0) adcPushed / fl else -1.0},""" +
-          s""""radc_pushed_probe_sec":$radcPushed,""" +
-          s""""radc_pushed_vs_float":${if (fl > 0) radcPushed / fl else -1.0},""" +
-          s""""radc_vs_float":${if (fl > 0) radc / fl else -1.0},""" +
-          s""""probed_cells":${cells.size},""" +
-          s""""float_candidate_scan_bytes":$flB,"adc_candidate_scan_bytes":$adcB,""" +
-          s""""radc_candidate_scan_bytes":$radcB,""" +
-          s""""adc_bytes_vs_float":${if (flB > 0) adcB.toDouble / flB else -1.0},""" +
-          s""""radc_bytes_vs_float":${if (flB > 0) radcB.toDouble / flB else -1.0}}"""
-      } catch { case NonFatal(t) => s""","ivf_index_scale":{"error":"${jsonErr(t)}"}""" }
+        def vsFloat(x: Double) = if (fl > 0) x / fl else -1.0
+        def bytesVsFloat(x: Long) = if (flB > 0) x.toDouble / flB else -1.0
+        Json.obj("corpus_factor" -> factor, "float_probe_sec" -> fl,
+          "adc_probe_sec" -> adc, "radc_probe_sec" -> radc,
+          "adc_candidate_phase_sec" -> adcCand,
+          "adc_recall_vs_rerank" -> recallCurve,
+          "adc_candidate_vs_float" -> vsFloat(adcCand),
+          "adc_vs_float" -> vsFloat(adc),
+          "adc_pushed_probe_sec" -> adcPushed,
+          "adc_pushed_vs_float" -> vsFloat(adcPushed),
+          "radc_pushed_probe_sec" -> radcPushed,
+          "radc_pushed_vs_float" -> vsFloat(radcPushed),
+          "radc_vs_float" -> vsFloat(radc),
+          "probed_cells" -> cells.size,
+          "float_candidate_scan_bytes" -> flB, "adc_candidate_scan_bytes" -> adcB,
+          "radc_candidate_scan_bytes" -> radcB,
+          "adc_bytes_vs_float" -> bytesVsFloat(adcB),
+          "radc_bytes_vs_float" -> bytesVsFloat(radcB))
+      }
       cleanup(probeDir)
       val rows = uniformRows :+ twoSided :+ imageFixedBands :+ imageWideBands
-      val worst = uniformRows.map(_._1).filterNot(_ < 0).foldLeft(0.0)(math.max)
       val twoSidedPerUnit =
-        if (twoSided._1 < 0) -1.0 else twoSided._1 / (factor.toDouble * factor)
-      (s""","scale_probe":{"factor":$factor,"queries":${rows.map(_._2).mkString("{", ",", "}")}}""" +
-        ivfIndexScale,
-        worst, twoSidedPerUnit, worstAttrib(uniformRows), worstName(uniformRows))
-    } catch { case NonFatal(t) =>
-      (s""","scale_probe":{"error":"${jsonErr(t)}"}""", -1.0, -1.0, "null", "null") }
+        if (twoSided.ratio < 0) -1.0 else twoSided.ratio / (factor.toDouble * factor)
+      (Json.obj("factor" -> factor, "queries" -> Json.obj(queriesObj(rows): _*)),
+        uniformRows, twoSidedPerUnit, ivfIndexScale)
+    }
 
     // Planted-SKEW probe (VERDICT r3 #2): the uniform replication above keeps
     // keys evenly loaded, which can't surface hot-key failure modes. Here the
@@ -466,7 +474,8 @@ object Bench {
     // UNSKEWED base, so a plan that degenerates on a hot key (single-task
     // window, unsplittable join partition, uncapped postings blowup) reads as
     // a superlinear ratio instead of hiding behind uniform balance.
-    val (skewJson, skewWorst, skewWorstAttrib, skewWorstQuery) = try {
+    // Value: (scale_probe_skew object, its measured rows).
+    val skewProbe = section("scale_probe_skew") {
       import org.apache.spark.sql.functions._
       val skewDir = java.nio.file.Files.createTempDirectory("graft_skew").toString
       // events: 10× replicas; half of all rows remapped into house "1_1_0"
@@ -551,7 +560,7 @@ object Bench {
       val hotBucketRow = probeRow(
         "q_minhash_lsh_pairs_hotbucket", "q_minhash_lsh_pairs", hotBucketDir,
         SparkEntry.queries("q_minhash_lsh_pairs"),
-        extra = s""","hot_doc_frac":0.3,"work_factor":1""")
+        extra = Seq("hot_doc_frac" -> 0.3, "work_factor" -> 1))
       cleanup(hotBucketDir)
       // Planted MEGA-CELL twin for the sub-partitioned within-cell embedding
       // joins (VERDICT r11 #1 — the embedding-space sibling of the LSH
@@ -563,10 +572,10 @@ object Bench {
       // ratio is hot-10× vs CLEAN-10× (same corpus size, same quadratic
       // family), so ≈ 1 is the healthy reading; the pre-guard equi-join
       // routed the hot cell's O((0.3n)²) pairs through one join key.
-      // guarded separately (the ivf_index_scale pattern): a failure building
+      // its own section (the ivf_index_scale pattern): a failure building
       // or timing the embedding fixtures must cost only THIS row, never the
       // already-measured skew rows above
-      val megaCellRow = try {
+      val megaCellRow = section("q_knn_graph_megacell") {
         val embCleanDir = java.nio.file.Files.createTempDirectory("graft_knn_clean").toString
         val embHotDir = java.nio.file.Files.createTempDirectory("graft_knn_hot").toString
         try {
@@ -577,17 +586,14 @@ object Bench {
               expr("transform(embedding, x -> CAST(0.5 + pmod(vec_id, 1000) / 1000000.0 AS FLOAT))"))
               .otherwise(col("embedding")))
             .write.mode("overwrite").parquet(s"$embHotDir/embeddings.parquet")
-          val knnClean10x = timed(SparkEntry.queries("q_knn_graph"), embCleanDir)
+          val knnClean10x = timedMin(SparkEntry.queries("q_knn_graph"), embCleanDir)
           // 64-block clamp saturation ledger (VERDICT r12 #2): the planted
           // 10× mega-cell (0.3 · 20k = 6000 identical-assignment vectors) is
           // past the clamp at threshold 64 (⌈6000/64⌉ = 94 > 64 blocks) —
           // the indivisible-cell case no grow-K can separate. The ledger
           // (one grouped count) must FIRE here; its fields quantify the
           // per-task block size the clamp has let grow.
-          val clampExtra = try {
-            val t0 = System.nanoTime()
-            val assigns = graft.ann.SimilarityOps.ivfAssignments(spark, embHotDir)
-            val led = graft.ann.SimilarityOps.overClampCells(assigns, 64L).collect()
+          val clampLedger = section("clamp_ledger") {
             // the 64 threshold above is the HOT-SLICE ORACLE FIXTURE's (it
             // makes the planted 6000-row cell saturate its 64-block clamp);
             // the timed q_knn_graph row runs at the engine default
@@ -600,35 +606,35 @@ object Bench {
             // re-running the assignment pipeline (review r14) — ledger_sec
             // is then one honest evaluation.
             val timedThreshold = graft.ann.SimilarityOps.CellPairSubThreshold
-            val ledTimed = led.filter(_.getLong(1) > 64L * timedThreshold)
-            val ledgerSec = (System.nanoTime() - t0) / 1e9
+            val ((led, ledTimed), ledgerSec) = CatalogBench.timed {
+              val assigns = graft.ann.SimilarityOps.ivfAssignments(spark, embHotDir)
+              val led = graft.ann.SimilarityOps.overClampCells(assigns, 64L).collect()
+              (led, led.filter(_.getLong(1) > 64L * timedThreshold))
+            }
             val maxBlock = if (led.isEmpty) 0L else led.map(_.getLong(3)).max
-            s""","clamp_ledger":{"threshold":64,"threshold_is_hotslice_fixture":true,""" +
-              s""""n_over_cells":${led.length},""" +
-              s""""max_block_rows":$maxBlock,""" +
-              s""""timed_query_threshold":$timedThreshold,""" +
-              s""""n_over_cells_at_timed_threshold":${ledTimed.length},""" +
-              s""""clamp_engaged_in_timed_plan":${ledTimed.nonEmpty},""" +
-              s""""ledger_sec":$ledgerSec}"""
-          } catch { case NonFatal(t) =>
-            s""","clamp_ledger":{"error":"${jsonErr(t)}"}""" }
+            Json.obj("threshold" -> 64, "threshold_is_hotslice_fixture" -> true,
+              "n_over_cells" -> led.length,
+              "max_block_rows" -> maxBlock,
+              "timed_query_threshold" -> timedThreshold,
+              "n_over_cells_at_timed_threshold" -> ledTimed.length,
+              "clamp_engaged_in_timed_plan" -> ledTimed.nonEmpty,
+              "ledger_sec" -> ledgerSec)
+          }
           probeRowVs(
             "q_knn_graph_megacell", knnClean10x, embHotDir,
             SparkEntry.queries("q_knn_graph"),
-            extra = s""","hot_vec_frac":0.3,"corpus_factor":$factor,"base_is_clean_10x":true$clampExtra""",
+            extra = Seq("hot_vec_frac" -> 0.3, "corpus_factor" -> factor,
+              "base_is_clean_10x" -> true, "clamp_ledger" -> clampLedger),
             fresh = Some((SparkEntry.queries("q_knn_graph"), embCleanDir)))
         } finally { cleanup(embCleanDir); cleanup(embHotDir) }
-      } catch { case NonFatal(t) =>
-        (-1.0, s""""q_knn_graph_megacell":{"error":"${jsonErr(t)}"}""",
-          s"""{"query":"q_knn_graph_megacell","ratio":-1.0}""")
       }
-      val rows = rows0 :+ hotBucketRow :+ megaCellRow
+      val rows = rows0 :+ hotBucketRow
       cleanup(skewDir)
-      val worst = rows.map(_._1).filterNot(_ < 0).foldLeft(0.0)(math.max)
-      (s""","scale_probe_skew":{"factor":$factor,"hot_doc_frac":0.3,"hot_event_frac":0.5,"hot_lineitem_frac":0.5,"queries":${rows.map(_._2).mkString("{", ",", "}")}}""",
-        worst, worstAttrib(rows), worstName(rows))
-    } catch { case NonFatal(t) =>
-      (s""","scale_probe_skew":{"error":"${jsonErr(t)}"}""", -1.0, "null", "null") }
+      (Json.obj("factor" -> factor, "hot_doc_frac" -> 0.3, "hot_event_frac" -> 0.5,
+        "hot_lineitem_frac" -> 0.5, "queries" -> Json.obj(queriesObj(rows) :+
+          ("q_knn_graph_megacell" -> megaCellRow.map(_.detail)): _*)),
+        rows ++ megaCellRow.toOption)
+    }
 
     // Rollup-serving demonstration: the same sliding-window counts, once over
     // raw events and once with RollupRewrite routing them onto the rollup
@@ -642,7 +648,7 @@ object Bench {
     // routes to the 60 s level — the reduction the lattice buys every
     // dashboard tile. At 100 TB the served plans read rollup tables instead
     // of the fact table.
-    val rollupServingJson = try {
+    val rollupServing = section("rollup_serving") {
       import org.apache.spark.sql.functions._
       val denseDir = java.nio.file.Files.createTempDirectory("graft_dense_grid").toString
       val baseEpoch = 1704067200L // 2024-01-01T00:00Z, minute-aligned
@@ -678,22 +684,17 @@ object Bench {
             count(when(col("power") > graft.operators.Grid.PowerThreshold, true))
               .as("c_duty"))
           .withColumn("duty_cycle", col("c_duty") / col("c_all"))
-      def time2(mk: => DataFrame): Double = {
-        def once(): Double = {
-          val t0 = System.nanoTime()
-          mk.count()
-          (System.nanoTime() - t0) / 1e9
-        }
-        math.min(once(), once())
-      }
-      val rawSecondSec = time2(windowed("25 seconds", "5 seconds"))
-      val rawMinuteSec = time2(windowed("120 seconds", "60 seconds"))
-      val rawDutySec = time2(dutyTile("25 seconds", "5 seconds"))
-      val rawDutyMinSec = time2(dutyTile("120 seconds", "60 seconds"))
+      val tiles = Seq(
+        "window_25s_5s_via_1s" -> (() => windowed("25 seconds", "5 seconds")),
+        "window_120s_60s_via_60s" -> (() => windowed("120 seconds", "60 seconds")),
+        "duty_tile_via_cnt_duty" -> (() => dutyTile("25 seconds", "5 seconds")),
+        "duty_tile_60s_via_lattice" -> (() => dutyTile("120 seconds", "60 seconds")))
+      def timeTiles(): Seq[Double] = tiles.map { case (_, tile) => bestOfTwo(tile().count()) }
+      val raw = timeTiles()
       graft.plans.RollupRewrite.install(
         spark, rollupDir, graft.operators.Grid.powerReadings(spark, denseDir),
         Seq((coarseDir, 60L)))
-      val (servedSecondSec, servedMinuteSec, servedDutySec, servedDutyMinSec) =
+      val served =
         try {
           val planSecond = windowed("25 seconds", "5 seconds")
             .queryExecution.optimizedPlan.toString
@@ -711,21 +712,15 @@ object Bench {
             .queryExecution.executedPlan.toString
           require(planDutyMin.contains("_60s"),
             s"minute duty tile did not route to the 60 s level:\n$planDutyMin")
-          (time2(windowed("25 seconds", "5 seconds")),
-            time2(windowed("120 seconds", "60 seconds")),
-            time2(dutyTile("25 seconds", "5 seconds")),
-            time2(dutyTile("120 seconds", "60 seconds")))
+          timeTiles()
         } finally graft.plans.RollupRewrite.uninstall(spark)
       cleanup(denseDir)
-      def leg(name: String, raw: Double, served: Double) =
-        s""""$name":{"raw_sec":$raw,"served_sec":$served,""" +
-          s""""speedup":${if (served > 0) raw / served else -1.0}}"""
-      s""","rollup_serving":{"raw_rows":${secs * apps * perSec},""" +
-        s"""${leg("window_25s_5s_via_1s", rawSecondSec, servedSecondSec)},""" +
-        s"""${leg("window_120s_60s_via_60s", rawMinuteSec, servedMinuteSec)},""" +
-        s"""${leg("duty_tile_via_cnt_duty", rawDutySec, servedDutySec)},""" +
-        s"""${leg("duty_tile_60s_via_lattice", rawDutyMinSec, servedDutyMinSec)}}"""
-    } catch { case NonFatal(t) => s""","rollup_serving":{"error":"${jsonErr(t)}"}""" }
+      Json.obj(("raw_rows" -> secs * apps * perSec) +:
+        tiles.map(_._1).lazyZip(raw).lazyZip(served).map { (name, r, s) =>
+          name -> Json.obj("raw_sec" -> r, "served_sec" -> s,
+            "speedup" -> (if (s > 0) r / s else -1.0))
+        }: _*)
+    }
 
     // Index-serving demonstration: per-batch cost against the durable LSH /
     // IVF indexes vs the naive one-shot recompute a pipeline without an
@@ -734,37 +729,31 @@ object Bench {
     // 10-query embedding batch (IVF top-k) — at 100 TB the one-shot side
     // re-signs/re-assigns the whole corpus per batch while the probe side
     // reads the index (DPP-pruned to the probed cells for IVF).
-    val indexServingJson = try {
+    val indexServing = section("index_serving") {
       import org.apache.spark.sql.functions._
       val base = java.nio.file.Files.createTempDirectory("graft_index_bench").toString
-      def time2(run: => Unit): Double = {
-        def once(): Double = {
-          val t0 = System.nanoTime(); run; (System.nanoTime() - t0) / 1e9
-        }
-        math.min(once(), once())
-      }
+      val embs = Tables.embeddings(spark, sfDir).select("vec_id", "embedding")
       val docs = graft.Tables.documents(spark, sfDir).select("doc_id", "text")
-      val lshFullSec = time2(graft.dedup.DedupOps.minhashLshPairs(spark, sfDir).count())
+      val lshFullSec = bestOfTwo(graft.dedup.DedupOps.minhashLshPairs(spark, sfDir).count())
       graft.dedup.LshIndex.materialize(spark, docs, s"$base/lsh")
       val lshBatch = docs.filter(col("doc_id") % 50 === 0) // a 2% ingest batch
-      val lshProbeSec = time2(
+      val lshProbeSec = bestOfTwo(
         graft.dedup.LshIndex.candidates(spark, s"$base/lsh", lshBatch).count())
-      val embs = graft.Tables.embeddings(spark, sfDir).select("vec_id", "embedding")
-      val ivfFullSec = time2(
+      val ivfFullSec = bestOfTwo(
         graft.ann.SimilarityOps.ivfTopKMultiProbe(spark, sfDir, 10, 3, 2).count())
       graft.ann.IvfIndex.materialize(spark, embs, s"$base/ivf")
-      val ivfSearchSec = time2(graft.ann.IvfIndex.search(
+      val ivfSearchSec = bestOfTwo(graft.ann.IvfIndex.search(
         spark, s"$base/ivf", embs.filter(col("vec_id") < 10), 3, 2).count())
       // IVFADC over the SAME index: the probed cells rank from stored PQ
       // codes (pq-only column-pruned scan) with bounded exact rerank; vs
       // the float probe above, the candidate scan reads ~1% of the bytes —
       // the gap widens with corpus size (memory bandwidth, not compute,
       // bounds ANN serving)
-      val ivfAdcSearchSec = time2(graft.ann.IvfIndex.searchAdc(
+      val ivfAdcSearchSec = bestOfTwo(graft.ann.IvfIndex.searchAdc(
         spark, s"$base/ivf", embs.filter(col("vec_id") < 10), 3, 2).count())
       // residual-IVFADC (FAISS IndexIVFPQ default): same byte economics as
       // the raw-code ADC probe — stored rpq codes, per-(query, cell) LUT
-      val ivfRadcSearchSec = time2(graft.ann.IvfIndex.searchRadc(
+      val ivfRadcSearchSec = bestOfTwo(graft.ann.IvfIndex.searchRadc(
         spark, s"$base/ivf", embs.filter(col("vec_id") < 10), 3, 2).count())
       // drift→retrain payoff (VERDICT r10 #6): residual-ADC agreement with
       // the float search (same probed cells, k=3 × 10 queries = 30 slots)
@@ -784,10 +773,8 @@ object Bench {
       }
       val radcHitsSeed = adcHits("radc")
       val adcHitsSeed = adcHits("adc")
-      val tRetrain = System.nanoTime()
-      graft.ann.IvfIndex.recluster(
-        spark, s"$base/ivf", maxIter = 0, retrainCodebook = true)
-      val codebookRetrainSec = (System.nanoTime() - tRetrain) / 1e9
+      val codebookRetrainSec = secs(graft.ann.IvfIndex.recluster(
+        spark, s"$base/ivf", maxIter = 0, retrainCodebook = true))
       val radcHitsTrained = adcHits("radc")
       val adcHitsTrained = adcHits("adc")
       // GROW-K maintenance row, at 10× (VERDICT r12 #6: at the 2k-row index
@@ -798,10 +785,10 @@ object Bench {
       // Reported: the one-off re-fit wall-clock (the price the policy pays
       // when it trips), hottest-cell rows before/after (the balance
       // payoff), candidate rows and the nprobe=2 float search
-      // before/after. Guarded separately (ADVICE r12): a grow-K failure
+      // before/after. Its own section (ADVICE r12): a grow-K failure
       // must cost only THESE fields, never the already-measured
       // LSH/IVF/ADC/retrain rows of this section.
-      val growkJson = try {
+      val growk = section[Seq[(String, Any)]]("growk") {
         val gkDir = s"$base/ivf_growk"
         val embs10 = replicateEmbeddings(embs, 10)
         graft.ann.IvfIndex.materialize(spark, embs10, gkDir)
@@ -814,102 +801,31 @@ object Bench {
         def gkProbedRows(): Long = graft.ann.IvfIndex.candidateRows(
           spark, gkDir, gkQueries, 2)
         val gkProbeRowsBefore = gkProbedRows()
-        val gkProbeBefore = time2(graft.ann.IvfIndex.search(
+        val gkProbeBefore = bestOfTwo(graft.ann.IvfIndex.search(
           spark, gkDir, gkQueries, 3, 2).count())
-        val tGrowk = System.nanoTime()
-        val (_, gkRan) = graft.ann.IvfIndex.maintainCellBudget(
-          spark, gkDir, targetCellRows = 3000, maxIter = 5)
-        val growkSec = (System.nanoTime() - tGrowk) / 1e9
+        val ((_, gkRan), growkSec) = CatalogBench.timed(graft.ann.IvfIndex.maintainCellBudget(
+          spark, gkDir, targetCellRows = 3000, maxIter = 5))
         val gkK = graft.ann.IvfIndex.currentCentroids(spark, gkDir).size
         val (gkMaxAfter, _) = graft.ann.IvfIndex.cellStats(spark, gkDir)
         val gkProbeRowsAfter = gkProbedRows()
-        val gkProbeAfter = time2(graft.ann.IvfIndex.search(
+        val gkProbeAfter = bestOfTwo(graft.ann.IvfIndex.search(
           spark, gkDir, gkQueries, 3, 2).count())
-        s""""growk_corpus_factor":10,"growk_ran":$gkRan,"growk_sec":$growkSec,""" +
-          s""""growk_k_after":$gkK,"growk_total_rows":$gkTotal,""" +
-          s""""growk_max_cell_before":$gkMaxBefore,"growk_max_cell_after":$gkMaxAfter,""" +
-          s""""growk_probe_rows_before":$gkProbeRowsBefore,""" +
-          s""""growk_probe_rows_after":$gkProbeRowsAfter,""" +
-          s""""growk_probe_sec_before":$gkProbeBefore,"growk_probe_sec_after":$gkProbeAfter"""
-      } catch { case NonFatal(t) => s""""growk_error":"${jsonErr(t)}"""" }
-      // AUTOMATIC grow-K policy leg (VERDICT r13 #2): the same 10× corpus
-      // arrives as a STREAM in 4 batches, twice — once with the in-stream
-      // cellBudget policy wired, once without. The policy feed's budget
-      // trips mid-stream (batch 2 pushes the hottest seed-8 cell past
-      // 3000), the re-fit runs between triggers under its own lease, and
-      // the later batches' probe phases — plus the final 100-query search —
-      // run against the re-balanced index. Published: per-batch wall
-      // seconds for BOTH feeds (the mid-stream recovery is visible as the
-      // policy feed's post-refit batches undercutting the unmaintained
-      // twin's), the maintenance ledger's row, and the final probe
-      // sec + candidate rows on each twin.
-      val autoGrowkJson = try {
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-        import spark.implicits._
-        val embs10Rows = replicateEmbeddings(embs, 10)
-          .collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
-        val nBatches = 4
-        val per = embs10Rows.length / nBatches
-        def feed(budget: Option[Long], tag: String): (Seq[Double], Double, Long, Int, String) = {
-          val d = java.nio.file.Files.createTempDirectory(s"graft_autogrowk_$tag").toString
-          try feedIn(d, budget)
-          finally cleanup(d) // also on failure — the 10× index must not orphan (review r14)
-        }
-        def feedIn(d: String, budget: Option[Long]): (Seq[Double], Double, Long, Int, String) = {
-          implicit val sc = spark.sqlContext
-          val stream = MemoryStream[(Long, Seq[Float])]
-          val q = graft.ann.IvfIndex.streamingAbsorb(
-            stream.toDF().toDF("vec_id", "embedding"),
-            s"$d/idx", s"$d/out", s"$d/ckpt",
-            cellBudget = budget, maintainLedgerOut = Some(s"$d/ledger")).start()
-          val secs = try {
-            (0 until nBatches).map { b =>
-              val lo = b * per
-              val hi = if (b == nBatches - 1) embs10Rows.length else lo + per
-              val t0 = System.nanoTime()
-              stream.addData(embs10Rows.slice(lo, hi).toSeq)
-              q.processAllAvailable()
-              (System.nanoTime() - t0) / 1e9
-            }
-          } finally q.stop()
-          val gkQueries = embs.filter(col("vec_id") < 100)
-          val probeSec = time2(graft.ann.IvfIndex.search(
-            spark, s"$d/idx", gkQueries, 3, 2).count())
-          val candRows = graft.ann.IvfIndex.candidateRows(spark, s"$d/idx", gkQueries, 2)
-          val kAfter = graft.ann.IvfIndex.currentCentroids(spark, s"$d/idx").size
-          val ledgerJson =
-            if (!new java.io.File(s"$d/ledger").exists()) "[]"
-            else spark.read.option("basePath", s"$d/ledger").parquet(s"$d/ledger")
-              .drop("batch").collect().map { r =>
-                s"""{"segment":${r.getAs[Long]("segment")},""" +
-                  s""""max_cell_before":${r.getAs[Long]("max_cell_before")},""" +
-                  s""""k_before":${r.getAs[Int]("k_before")},""" +
-                  s""""k_after":${r.getAs[Int]("k_after")}}"""
-              }.mkString("[", ",", "]")
-          (secs, probeSec, candRows, kAfter, ledgerJson)
-        }
-        val (offSecs, offProbe, offCand, offK, _) = feed(None, "off")
-        val (onSecs, onProbe, onCand, onK, onLedger) = feed(Some(3000L), "on")
-        s""","auto_growk_stream":{"corpus_factor":10,"batches":$nBatches,""" +
-          s""""cell_budget":3000,""" +
-          s""""policy_off_batch_secs":${offSecs.map(s => f"$s%.3f").mkString("[", ",", "]")},""" +
-          s""""policy_on_batch_secs":${onSecs.map(s => f"$s%.3f").mkString("[", ",", "]")},""" +
-          s""""policy_off_k":$offK,"policy_on_k":$onK,""" +
-          s""""policy_off_final_probe_sec":$offProbe,"policy_on_final_probe_sec":$onProbe,""" +
-          s""""policy_off_candidate_rows":$offCand,"policy_on_candidate_rows":$onCand,""" +
-          s""""probe_recovery":${if (onProbe > 0) offProbe / onProbe else -1.0},""" +
-          s""""maintenance_ledger":$onLedger}"""
-      } catch { case NonFatal(t) =>
-        s""","auto_growk_stream":{"error":"${jsonErr(t)}"}""" }
+        Seq("growk_corpus_factor" -> 10, "growk_ran" -> gkRan, "growk_sec" -> growkSec,
+          "growk_k_after" -> gkK, "growk_total_rows" -> gkTotal,
+          "growk_max_cell_before" -> gkMaxBefore, "growk_max_cell_after" -> gkMaxAfter,
+          "growk_probe_rows_before" -> gkProbeRowsBefore,
+          "growk_probe_rows_after" -> gkProbeRowsAfter,
+          "growk_probe_sec_before" -> gkProbeBefore, "growk_probe_sec_after" -> gkProbeAfter)
+      }
       // hamming fingerprint index: one-shot = rehash + all-band self-join of
       // the whole image corpus; probe = a 2% batch against the stored bands
       // (zero-shuffle broadcast probe)
       val fps = graft.multimodal.MediaOps.imageFingerprints(spark, sfDir)
-      val fpFullSec = time2(
+      val fpFullSec = bestOfTwo(
         graft.multimodal.MediaOps.imageNearDup(spark, sfDir).count())
       graft.dedup.FingerprintIndex.materialize(spark, fps, s"$base/fp")
       val fpBatch = fps.filter(col("id") % 50 === 0)
-      val fpProbeSec = time2(graft.dedup.FingerprintIndex.candidates(
+      val fpProbeSec = bestOfTwo(graft.dedup.FingerprintIndex.candidates(
         spark, s"$base/fp", fpBatch).count())
       // the hamming index's health signal (band-occupancy skew ≈ 1 means
       // probe cost is uniform; a hot bucket inflates it quadratically) plus
@@ -927,19 +843,19 @@ object Bench {
       // recompute every consumer used to pay; served = reading the published
       // label snapshot (the store itself was built once by the query
       // catalog's first consumer, so `ensure` here is a lookup)
-      val pairFullSec = time2(graft.dedup.DedupOps.nearDupLabels(spark, sfDir).count())
-      val pairServedSec = time2(graft.dedup.PairStore.labelsFor(spark, sfDir).count())
+      val pairFullSec = bestOfTwo(graft.dedup.DedupOps.nearDupLabels(spark, sfDir).count())
+      val pairServedSec = bestOfTwo(graft.dedup.PairStore.labelsFor(spark, sfDir).count())
       // the honest COLD build cost the min-of-two serving rows can never
       // show (VERDICT r8 #6): pair join + CC fixpoint + snapshot publish
       // into a fresh store, timed once — this is what the FIRST consumer
       // (or a corpus-change rebuild) actually pays before the 30× serving
       // legs exist
       val coldDir = java.nio.file.Files.createTempDirectory("graft_pairstore_cold").toString
-      val tBuild = System.nanoTime()
-      graft.dedup.PairStore.materialize(
-        spark, graft.dedup.DedupOps.ngramJaccardPairs(spark, sfDir), coldDir)
-      graft.dedup.PairStore.refreshLabels(spark, coldDir)
-      val pairBuildSec = (System.nanoTime() - tBuild) / 1e9
+      val pairBuildSec = secs {
+        graft.dedup.PairStore.materialize(
+          spark, graft.dedup.DedupOps.ngramJaccardPairs(spark, sfDir), coldDir)
+        graft.dedup.PairStore.refreshLabels(spark, coldDir)
+      }
       cleanup(coldDir)
       // incremental absorb: pairs of a 2% document batch (exact, vs the
       // full-corpus pair join an index-less pipeline re-runs per batch).
@@ -949,19 +865,18 @@ object Bench {
       // incremental benefit); the one-off postings build is timed
       // separately, and the store-less recompute form stays published as
       // the audit-trail comparison.
-      val incrFullSec = time2(graft.dedup.DedupOps.ngramJaccardPairs(spark, sfDir).count())
+      val incrFullSec = bestOfTwo(graft.dedup.DedupOps.ngramJaccardPairs(spark, sfDir).count())
       val shingleIdxDir = s"$base/shingles"
-      val tShIdx = System.nanoTime()
-      graft.dedup.ShingleIndex.materialize(spark, sfDir, shingleIdxDir)
-      val shingleBuildSec = (System.nanoTime() - tShIdx) / 1e9
-      val incrBatchSec = time2(graft.dedup.ShingleIndex
+      val shingleBuildSec = secs(
+        graft.dedup.ShingleIndex.materialize(spark, sfDir, shingleIdxDir))
+      val incrBatchSec = bestOfTwo(graft.dedup.ShingleIndex
         .incrementalPairs(spark, shingleIdxDir, _ % 50 === 0).count())
-      val incrRecomputeSec = time2(graft.dedup.DedupOps
+      val incrRecomputeSec = bestOfTwo(graft.dedup.DedupOps
         .ngramJaccardPairsIncremental(spark, sfDir, _ % 50 === 0).count())
       // the FULL pair set served from the same store (join-free posting-list
       // expansion) vs its live derivation — what PairStore builds and
       // cluster refreshes pay once the store exists
-      val fullServedSec = time2(
+      val fullServedSec = bestOfTwo(
         graft.dedup.ShingleIndex.allPairs(spark, shingleIdxDir).count())
       // the true STREAMING-ADMISSION path: a batch of NEW documents (2%)
       // probed against a store of the other 98% under the stored (stale-df)
@@ -970,36 +885,104 @@ object Bench {
       val admIdxDir = s"$base/shingles_adm"
       graft.dedup.ShingleIndex.materializeDocs(
         spark, docs.filter(col("doc_id") % 50 =!= 0), admIdxDir)
-      val admProbeSec = time2(graft.dedup.ShingleIndex.probePairs(
+      val admProbeSec = bestOfTwo(graft.dedup.ShingleIndex.probePairs(
         spark, admIdxDir, docs.filter(col("doc_id") % 50 === 0)).count())
       cleanup(base)
-      def leg(name: String, full: Double, probe: Double) =
-        s""""$name":{"one_shot_sec":$full,"index_probe_sec":$probe,""" +
-          s""""speedup":${if (probe > 0) full / probe else -1.0}}"""
-      s""","index_serving":{${leg("lsh_batch_candidates", lshFullSec, lshProbeSec)},""" +
-        s"""${leg("ivf_topk_search", ivfFullSec, ivfSearchSec)},""" +
-        s"""${leg("ivf_adc_search", ivfFullSec, ivfAdcSearchSec)},""" +
-        s"""${leg("ivf_radc_search", ivfFullSec, ivfRadcSearchSec)},""" +
-        s""""ivf_adc_vs_float_probe":${
-          if (ivfSearchSec > 0) ivfAdcSearchSec / ivfSearchSec else -1.0},""" +
-        s""""ivf_radc_hits30_seed":$radcHitsSeed,""" +
-        s""""ivf_radc_hits30_trained":$radcHitsTrained,""" +
-        s""""ivf_adc_hits30_seed":$adcHitsSeed,""" +
-        s""""ivf_adc_hits30_trained":$adcHitsTrained,""" +
-        s""""codebook_retrain_sec":$codebookRetrainSec,""" +
-        s"""$growkJson,""" +
-        s"""${leg("fp_hamming_candidates", fpFullSec, fpProbeSec)},""" +
-        s"""${leg("neardup_labels_via_pairstore", pairFullSec, pairServedSec)},""" +
-        s"""${leg("jaccard_pairs_incremental_batch", incrFullSec, incrBatchSec)},""" +
-        s"""${leg("jaccard_pairs_full_via_postings", incrFullSec, fullServedSec)},""" +
-        s"""${leg("jaccard_admission_probe", incrFullSec, admProbeSec)},""" +
-        s""""jaccard_incremental_recompute_sec":$incrRecomputeSec,""" +
-        s""""shingle_index_build_sec":$shingleBuildSec,""" +
-        s""""pairstore_build_sec":$pairBuildSec,""" +
-        s""""fp_occupancy_skew":$fpSkew,""" +
-        s""""fp_occupancy_cap":$fpCap,"fp_over_cap_buckets":${fpLed.length},""" +
-        s""""fp_suppressed_candidate_pairs":$fpSuppressed}""" + autoGrowkJson
-    } catch { case NonFatal(t) => s""","index_serving":{"error":"${jsonErr(t)}"}""" }
+      def leg(name: String, full: Double, probe: Double) = name -> Json.obj(
+        "one_shot_sec" -> full, "index_probe_sec" -> probe,
+        "speedup" -> (if (probe > 0) full / probe else -1.0))
+      Json.obj(Seq(leg("lsh_batch_candidates", lshFullSec, lshProbeSec),
+        leg("ivf_topk_search", ivfFullSec, ivfSearchSec),
+        leg("ivf_adc_search", ivfFullSec, ivfAdcSearchSec),
+        leg("ivf_radc_search", ivfFullSec, ivfRadcSearchSec),
+        "ivf_adc_vs_float_probe" ->
+          (if (ivfSearchSec > 0) ivfAdcSearchSec / ivfSearchSec else -1.0),
+        "ivf_radc_hits30_seed" -> radcHitsSeed,
+        "ivf_radc_hits30_trained" -> radcHitsTrained,
+        "ivf_adc_hits30_seed" -> adcHitsSeed,
+        "ivf_adc_hits30_trained" -> adcHitsTrained,
+        "codebook_retrain_sec" -> codebookRetrainSec) ++
+        growk.fold[Seq[(String, Any)]](t => Seq("growk" -> Json.error(t)), identity) ++
+        Seq(leg("fp_hamming_candidates", fpFullSec, fpProbeSec),
+        leg("neardup_labels_via_pairstore", pairFullSec, pairServedSec),
+        leg("jaccard_pairs_incremental_batch", incrFullSec, incrBatchSec),
+        leg("jaccard_pairs_full_via_postings", incrFullSec, fullServedSec),
+        leg("jaccard_admission_probe", incrFullSec, admProbeSec),
+        "jaccard_incremental_recompute_sec" -> incrRecomputeSec,
+        "shingle_index_build_sec" -> shingleBuildSec,
+        "pairstore_build_sec" -> pairBuildSec,
+        "fp_occupancy_skew" -> fpSkew,
+        "fp_occupancy_cap" -> fpCap, "fp_over_cap_buckets" -> fpLed.length,
+        "fp_suppressed_candidate_pairs" -> fpSuppressed): _*)
+    }
+
+    // AUTOMATIC grow-K policy leg (VERDICT r13 #2): the same 10× corpus
+    // arrives as a STREAM in 4 batches, twice — once with the in-stream
+    // cellBudget policy wired, once without. The policy feed's budget
+    // trips mid-stream (batch 2 pushes the hottest seed-8 cell past
+    // 3000), the re-fit runs between triggers under its own lease, and
+    // the later batches' probe phases — plus the final 100-query search —
+    // run against the re-balanced index. Published: per-batch wall
+    // seconds for BOTH feeds (the mid-stream recovery is visible as the
+    // policy feed's post-refit batches undercutting the unmaintained
+    // twin's), the maintenance ledger's row, and the final probe
+    // sec + candidate rows on each twin.
+    val autoGrowk = section("auto_growk_stream") {
+      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+      import org.apache.spark.sql.functions._
+      import spark.implicits._
+      val embs = Tables.embeddings(spark, sfDir).select("vec_id", "embedding")
+      val embs10Rows = replicateEmbeddings(embs, 10)
+        .collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
+      val nBatches = 4
+      val per = embs10Rows.length / nBatches
+      def feed(budget: Option[Long], tag: String): (Seq[Double], Double, Long, Int, Seq[ObjectNode]) = {
+        val d = java.nio.file.Files.createTempDirectory(s"graft_autogrowk_$tag").toString
+        try feedIn(d, budget)
+        finally cleanup(d) // also on failure — the 10× index must not orphan (review r14)
+      }
+      def feedIn(d: String, budget: Option[Long]): (Seq[Double], Double, Long, Int, Seq[ObjectNode]) = {
+        implicit val sc = spark.sqlContext
+        val stream = MemoryStream[(Long, Seq[Float])]
+        val q = graft.ann.IvfIndex.streamingAbsorb(
+          stream.toDF().toDF("vec_id", "embedding"),
+          s"$d/idx", s"$d/out", s"$d/ckpt",
+          cellBudget = budget, maintainLedgerOut = Some(s"$d/ledger")).start()
+        val batchSecs = try {
+          (0 until nBatches).map { b =>
+            val lo = b * per
+            val hi = if (b == nBatches - 1) embs10Rows.length else lo + per
+            secs { stream.addData(embs10Rows.slice(lo, hi).toSeq); q.processAllAvailable() }
+          }
+        } finally q.stop()
+        val gkQueries = embs.filter(col("vec_id") < 100)
+        val probeSec = bestOfTwo(graft.ann.IvfIndex.search(
+          spark, s"$d/idx", gkQueries, 3, 2).count())
+        val candRows = graft.ann.IvfIndex.candidateRows(spark, s"$d/idx", gkQueries, 2)
+        val kAfter = graft.ann.IvfIndex.currentCentroids(spark, s"$d/idx").size
+        val ledger =
+          if (!new java.io.File(s"$d/ledger").exists()) Seq.empty[ObjectNode]
+          else spark.read.option("basePath", s"$d/ledger").parquet(s"$d/ledger")
+            .drop("batch").collect().toSeq.map { r =>
+              Json.obj("segment" -> r.getAs[Long]("segment"),
+                "max_cell_before" -> r.getAs[Long]("max_cell_before"),
+                "k_before" -> r.getAs[Int]("k_before"),
+                "k_after" -> r.getAs[Int]("k_after"))
+            }
+        (batchSecs, probeSec, candRows, kAfter, ledger)
+      }
+      val (offSecs, offProbe, offCand, offK, _) = feed(None, "off")
+      val (onSecs, onProbe, onCand, onK, onLedger) = feed(Some(3000L), "on")
+      Json.obj("corpus_factor" -> 10, "batches" -> nBatches,
+        "cell_budget" -> 3000,
+        "policy_off_batch_secs" -> offSecs.map(roundTo(_, 3)),
+        "policy_on_batch_secs" -> onSecs.map(roundTo(_, 3)),
+        "policy_off_k" -> offK, "policy_on_k" -> onK,
+        "policy_off_final_probe_sec" -> offProbe, "policy_on_final_probe_sec" -> onProbe,
+        "policy_off_candidate_rows" -> offCand, "policy_on_candidate_rows" -> onCand,
+        "probe_recovery" -> (if (onProbe > 0) offProbe / onProbe else -1.0),
+        "maintenance_ledger" -> onLedger)
+    }
 
     // Shingle-store rebuild governance (VERDICT r14 #2 + #3): the COMPOSED
     // two-tier admission pipeline over the real corpus. 90% of documents
@@ -1014,7 +997,7 @@ object Bench {
     // inside the cooldown and publishes signal only. The per-batch signal,
     // the rebuild ledger, the catch-up size, and the composed pipeline's
     // docs/s all land in the artifact.
-    val shingleGovernanceJson = try {
+    val shingleGovernance = section("shingle_governance") {
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       import org.apache.spark.sql.functions._
       import spark.implicits._
@@ -1022,9 +1005,7 @@ object Bench {
       val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
       val corpus = docs.filter(col("doc_id") % 10 =!= 0)
       val corpusDocs = corpus.count()
-      val tInit = System.nanoTime()
-      graft.dedup.ShingleIndex.initGenerations(spark, s"$base/gen", corpus)
-      val initSec = (System.nanoTime() - tInit) / 1e9
+      val initSec = secs(graft.dedup.ShingleIndex.initGenerations(spark, s"$base/gen", corpus))
       // ADVICE r15 #3: everything below collect()s the held-out split to
       // feed MemoryStream — cap the driver-side row count so a larger SF
       // cannot OOM the driver through this fixture (the governance behavior
@@ -1072,22 +1053,17 @@ object Bench {
         _.collect().map(r => (r.getLong(0), r.getString(1))).toSeq) ++ Seq(
         driftRows.take(dHalf).toSeq, driftRows.drop(dHalf).toSeq)
       val batchSecs = try {
-        batches.map { rows =>
-          val t0 = System.nanoTime()
-          stream.addData(rows)
-          q.processAllAvailable()
-          (System.nanoTime() - t0) / 1e9
-        }
+        batches.map(rows => secs { stream.addData(rows); q.processAllAvailable() })
       } finally q.stop()
       val nDocs = batches.map(_.length.toLong).sum
-      val ledgerJson = spark.read.option("basePath", s"$base/ledger")
-        .parquet(s"$base/ledger").orderBy("segment").collect().map { r =>
-          s"""{"gen":${r.getAs[Long]("gen")},""" +
-            s""""unseen_frac":${f"${r.getAs[Double]("unseen_frac")}%.4f"},""" +
-            s""""rebuilt":${r.getAs[Boolean]("rebuilt")},""" +
-            s""""gen_after":${r.getAs[Long]("gen_after")},""" +
-            s""""catchup_pairs":${r.getAs[Long]("catchup_pairs")}}"""
-        }.mkString("[", ",", "]")
+      val ledger = spark.read.option("basePath", s"$base/ledger")
+        .parquet(s"$base/ledger").orderBy("segment").collect().toSeq.map { r =>
+          Json.obj("gen" -> r.getAs[Long]("gen"),
+            "unseen_frac" -> roundTo(r.getAs[Double]("unseen_frac"), 4),
+            "rebuilt" -> r.getAs[Boolean]("rebuilt"),
+            "gen_after" -> r.getAs[Long]("gen_after"),
+            "catchup_pairs" -> r.getAs[Long]("catchup_pairs"))
+        }
       val genFinal = graft.dedup.ShingleIndex.currentGeneration(spark, s"$base/gen")
       // catch-up convergence, priced honestly: the exact tiers' distinct
       // pair set is a SUPERSET of the rebuilt generation's fixpoint (pairs
@@ -1104,20 +1080,19 @@ object Bench {
         spark, graft.dedup.ShingleIndex.currentGenerationPath(spark, s"$base/gen"))
         .count()
       cleanup(base)
-      s""","shingle_governance":{"corpus_docs":$corpusDocs,"stream_docs":$nDocs,""" +
-        s""""gen_build_sec":$initSec,""" +
-        s""""natural_unseen_frac":${f"$naturalUnseen%.4f"},""" +
-        s""""staleness_threshold":${thresholdOpt.map(t => f"$t%.4f").getOrElse("null")},""" +
-        s""""batch_secs":${batchSecs.map(s => f"$s%.3f").mkString("[", ",", "]")},""" +
-        s""""two_tier_docs_per_sec":${(nDocs / batchSecs.sum).toLong},""" +
-        s""""final_generation":$genFinal,""" +
-        s""""exact_tier_distinct_pairs":$exactPairs,""" +
-        s""""fixpoint_pairs":$fixpointPairs,""" +
-        s""""stale_surplus_pairs":${exactPairs - fixpointPairs},""" +
-        s""""lsh_tier_pairs":$lshTierPairs,""" +
-        s""""ledger":$ledgerJson}"""
-    } catch { case NonFatal(t) =>
-      s""","shingle_governance":{"error":"${jsonErr(t)}"}""" }
+      Json.obj("corpus_docs" -> corpusDocs, "stream_docs" -> nDocs,
+        "gen_build_sec" -> initSec,
+        "natural_unseen_frac" -> roundTo(naturalUnseen, 4),
+        "staleness_threshold" -> thresholdOpt.map(roundTo(_, 4)),
+        "batch_secs" -> batchSecs.map(roundTo(_, 3)),
+        "two_tier_docs_per_sec" -> (nDocs / batchSecs.sum).toLong,
+        "final_generation" -> genFinal,
+        "exact_tier_distinct_pairs" -> exactPairs,
+        "fixpoint_pairs" -> fixpointPairs,
+        "stale_surplus_pairs" -> (exactPairs - fixpointPairs),
+        "lsh_tier_pairs" -> lshTierPairs,
+        "ledger" -> ledger)
+    }
 
     // PairStore streaming absorb under skew (VERDICT r8 #8): micro-batch
     // pair absorbs with the cadenced in-stream label refresh, once over
@@ -1127,7 +1102,7 @@ object Bench {
     // the cadenced refreshes, plus the explicit full-fixpoint refresh
     // second at the end. hot/uniform near 1 means the CC fixpoint and the
     // segment absorbs don't serialize on the hot key.
-    val pairStreamingJson = try {
+    val pairStreaming = section("pairstore_streaming") {
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       import org.apache.spark.sql.functions._
       import spark.implicits._
@@ -1144,33 +1119,31 @@ object Bench {
           .streamingAbsorb(pairs, s"$base/store", s"$base/ckpt", refreshEvery = 2)
           .start()
         val per = nPairs / batches
-        val t0 = System.nanoTime()
-        try {
-          (0 until batches).foreach { b =>
-            val rows = (0 until per).map { i =>
-              val j = (b.toLong * per + i)
-              if (hot && i % 10 < 3) (0L, j + 1) else (2 * j + 1, 2 * j + 2)
+        val absorbSec = secs {
+          try {
+            (0 until batches).foreach { b =>
+              val rows = (0 until per).map { i =>
+                val j = (b.toLong * per + i)
+                if (hot && i % 10 < 3) (0L, j + 1) else (2 * j + 1, 2 * j + 2)
+              }
+              stream.addData(rows)
+              q.processAllAvailable()
             }
-            stream.addData(rows)
-            q.processAllAvailable()
-          }
-        } finally q.stop()
-        val absorbSec = (System.nanoTime() - t0) / 1e9
-        val tr = System.nanoTime()
-        graft.dedup.PairStore.refreshLabels(spark, s"$base/store")
-        val refreshSec = (System.nanoTime() - tr) / 1e9
+          } finally q.stop()
+        }
+        val refreshSec = secs(graft.dedup.PairStore.refreshLabels(spark, s"$base/store"))
         cleanup(base)
         (nPairs / absorbSec, refreshSec)
       }
       val (uniRps, uniRefresh) = feed(hot = false)
       val (hotRps, hotRefresh) = feed(hot = true)
-      s""","pairstore_streaming":{"pair_rows":$nPairs,"micro_batches":$batches,""" +
-        s""""refresh_every":2,"hot_pair_frac":0.3,""" +
-        s""""uniform_rows_per_sec":${uniRps.toLong},"hot_rows_per_sec":${hotRps.toLong},""" +
-        s""""hot_slowdown":${if (hotRps > 0) uniRps / hotRps else -1.0},""" +
-        s""""refresh_sec_uniform":$uniRefresh,"refresh_sec_hot":$hotRefresh,""" +
-        s""""refresh_hot_ratio":${if (uniRefresh > 0) hotRefresh / uniRefresh else -1.0}}"""
-    } catch { case NonFatal(t) => s""","pairstore_streaming":{"error":"${jsonErr(t)}"}""" }
+      Json.obj("pair_rows" -> nPairs, "micro_batches" -> batches,
+        "refresh_every" -> 2, "hot_pair_frac" -> 0.3,
+        "uniform_rows_per_sec" -> uniRps.toLong, "hot_rows_per_sec" -> hotRps.toLong,
+        "hot_slowdown" -> (if (hotRps > 0) uniRps / hotRps else -1.0),
+        "refresh_sec_uniform" -> uniRefresh, "refresh_sec_hot" -> hotRefresh,
+        "refresh_hot_ratio" -> (if (uniRefresh > 0) hotRefresh / uniRefresh else -1.0))
+    }
 
     // Long-document probe (VERDICT r8 #2): per-row lambda costs are
     // invisible at the corpus's ~54 tokens/doc — plant 200 docs × 2k and
@@ -1179,7 +1152,7 @@ object Bench {
     // top-token statistic stays LINEAR in document length; the quadratic
     // form this replaced (array_max over per-distinct-token filters) would
     // read ~5× here (25× work / 5× tokens).
-    val longDocJson = try {
+    val longDoc = section("long_doc_probe") {
       import spark.implicits._
       def mk(tokensPerDoc: Int): String = {
         val dir = java.nio.file.Files.createTempDirectory("graft_longdoc").toString
@@ -1196,39 +1169,34 @@ object Bench {
           .repartition(8).write.mode("overwrite").parquet(s"$dir/documents.parquet")
         dir
       }
-      def t(dir: String): Double = {
-        def once(): Double = {
-          val t0 = System.nanoTime()
-          graft.text.FilterRules.gopherRules(spark, dir).count()
-          (System.nanoTime() - t0) / 1e9
-        }
-        math.min(once(), once())
-      }
+      def t(dir: String): Double = bestOfTwo(graft.text.FilterRules.gopherRules(spark, dir).count())
       val dShort = mk(2000); val sShort = t(dShort)
       val dLong = mk(10000); val sLong = t(dLong)
       cleanup(dShort); cleanup(dLong)
       val perTok = if (sShort > 0) (sLong / 5.0) / sShort else -1.0
-      s""","long_doc_probe":{"docs":200,"tokens_short":2000,"tokens_long":10000,""" +
-        s""""gopher_sec_short":$sShort,"gopher_sec_long":$sLong,""" +
-        s""""sec_per_token_ratio":$perTok}"""
-    } catch { case NonFatal(t) => s""","long_doc_probe":{"error":"${jsonErr(t)}"}""" }
+      Json.obj("docs" -> 200, "tokens_short" -> 2000, "tokens_long" -> 10000,
+        "gopher_sec_short" -> sShort, "gopher_sec_long" -> sLong,
+        "sec_per_token_ratio" -> perTok)
+    }
 
     // Streaming throughput vs BASELINE.md's one published number (≥100k
     // msg/s sustained ingest): run the duty-cycle streaming plan over a 1M-row
     // file source (MemoryStream would measure the driver's single-threaded
     // row encoding, not the plan) and report end-to-end rows/s.
-    val (streamingJson, streamingRps) = try {
+    // Value: (streaming object, the headline rows/s).
+    val streaming = section("streaming") {
       import java.sql.Timestamp
-      import org.apache.spark.sql.streaming.OutputMode
+      import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
       import graft.streaming.{GridConfig, StreamingDutyCycle}
       import spark.implicits._
       val n = 1000000L
+      // reading i: one per second of a day, power cycling through 0-399 W
+      val reading = (i: Long, house: String, appliance: String) => StreamingDutyCycle.PowerReading(
+        new Timestamp((i % 86400) * 1000L), house, "lamp", appliance, (i % 400).toDouble)
+      def writeReadings(dir: String)(row: Long => StreamingDutyCycle.PowerReading): Unit =
+        spark.range(n).map(i => row(i)).repartition(16).write.mode("overwrite").parquet(dir)
       val dir = java.nio.file.Files.createTempDirectory("graft_stream_bench").toString
-      spark.range(n).map { i =>
-        StreamingDutyCycle.PowerReading(
-          new Timestamp((i % 86400) * 1000L),
-          s"1_1_${i % 5}", "lamp", s"1_1_${i % 5}_${i % 50}", (i % 400).toDouble)
-      }.repartition(16).write.mode("overwrite").parquet(dir)
+      writeReadings(dir)(i => reading(i, s"1_1_${i % 5}", s"1_1_${i % 5}_${i % 50}"))
       // Planted-hot-key twin (VERDICT r5 missing #5: the batch skew probe
       // had no streaming counterpart — these gates fed uniform keys only):
       // 60% of all readings land on ONE appliance in ONE house, the rest
@@ -1239,29 +1207,24 @@ object Bench {
       // collapses to one row per input partition per trigger rather than
       // funneling raw readings through one state task.
       val hotDir = java.nio.file.Files.createTempDirectory("graft_stream_hot").toString
-      spark.range(n).map { i =>
-        if (i % 10 < 6)
-          StreamingDutyCycle.PowerReading(
-            new Timestamp((i % 86400) * 1000L),
-            "1_1_0", "lamp", "1_1_0_0", (i % 400).toDouble)
-        else
-          StreamingDutyCycle.PowerReading(
-            new Timestamp((i % 86400) * 1000L),
-            s"1_1_${i % 5}", "lamp", s"1_1_${i % 5}_${i % 50}", (i % 400).toDouble)
-      }.repartition(16).write.mode("overwrite").parquet(hotDir)
+      writeReadings(hotDir)(i =>
+        if (i % 10 < 6) reading(i, "1_1_0", "1_1_0_0")
+        else reading(i, s"1_1_${i % 5}", s"1_1_${i % 5}_${i % 50}"))
       val schema = spark.read.parquet(dir).schema
+      // rows/s of one run: the clock starts before the query plans and
+      // stops once the whole source is processed, before the stop
       def throughputAttempts(name: String, srcDir: String,
           planFn: DataFrame => DataFrame, attempts: Int): Seq[Long] = {
         def once(attempt: Int): Long = {
           val stream = spark.readStream.schema(schema).parquet(srcDir)
-          val t0 = System.nanoTime()
-          val query = planFn(stream)
-            .writeStream.format("memory").queryName(s"${name}_$attempt")
-            .outputMode(org.apache.spark.sql.streaming.OutputMode.Append).start()
-          try {
+          var query: StreamingQuery = null
+          try (n / secs {
+            query = planFn(stream)
+              .writeStream.format("memory").queryName(s"${name}_$attempt")
+              .outputMode(OutputMode.Append).start()
             query.processAllAvailable()
-            (n / ((System.nanoTime() - t0) / 1e9)).toLong
-          } finally query.stop()
+          }).toLong
+          finally if (query != null) query.stop()
         }
         (1 to attempts).map(once)
       }
@@ -1326,11 +1289,7 @@ object Bench {
         // collapsing toward 1/10 would flag per-key costs serializing the
         // pipeline.
         val keysDir = java.nio.file.Files.createTempDirectory("graft_stream_keys").toString
-        spark.range(n).map { i =>
-          StreamingDutyCycle.PowerReading(
-            new Timestamp((i % 86400) * 1000L),
-            s"1_1_${i % 50}", "lamp", s"1_1_${i % 50}_${i % 50}", (i % 400).toDouble)
-        }.repartition(16).write.mode("overwrite").parquet(keysDir)
+        writeReadings(keysDir)(i => reading(i, s"1_1_${i % 50}", s"1_1_${i % 50}_${i % 50}"))
         val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
         val (rpsRocksBase, rpsRocks10x) =
           try {
@@ -1349,28 +1308,28 @@ object Bench {
           }
         val stateScaleRatio =
           if (rpsRocksBase > 0) rpsRocks10x.toDouble / rpsRocksBase else -1.0
-        (s""","streaming":{"duty_cycle_rows_per_sec":$rps,""" +
-          s""""duty_cycle_attempts_rows_per_sec":${rpsAttempts.mkString("[", ",", "]")},""" +
-          s""""duty_cycle_prerolled_rows_per_sec":$rpsPre,""" +
-          s""""duty_cycle_prerolled_attempts_rows_per_sec":${rpsPreAttempts.mkString("[", ",", "]")},""" +
-          s""""duty_cycle_25pane_rows_per_sec":$rpsPane,""" +
-          s""""duty_cycle_25pane_prerolled_rows_per_sec":$rpsPanePre,""" +
-          s""""preroll_crossover_25pane":${
-            if (rpsPane > 0) rpsPanePre.toDouble / rpsPane else -1.0},""" +
-          s""""duty_cycle_60pane_rows_per_sec":$rpsPane60,""" +
-          s""""duty_cycle_60pane_prerolled_rows_per_sec":$rpsPane60Pre,""" +
-          s""""preroll_crossover_60pane":${
-            if (rpsPane60 > 0) rpsPane60Pre.toDouble / rpsPane60 else -1.0},""" +
-          s""""duty_cycle_hot_key_rows_per_sec":$rpsHot,""" +
-          s""""hot_key_frac":0.6,"hot_key_slowdown":$hotRatio,""" +
-          s""""rollup_full_sketch_rows_per_sec":$rpsRollupFull,""" +
-          s""""rocksdb_rows_per_sec_base_keys":$rpsRocksBase,""" +
-          s""""rocksdb_rows_per_sec_10x_keys":$rpsRocks10x,""" +
-          s""""state_keys_factor":10,"state_scale_ratio":$stateScaleRatio,""" +
-          s""""input_rows":$n,"baseline_rows_per_sec":100000}""",
+        (Json.obj("duty_cycle_rows_per_sec" -> rps,
+          "duty_cycle_attempts_rows_per_sec" -> rpsAttempts,
+          "duty_cycle_prerolled_rows_per_sec" -> rpsPre,
+          "duty_cycle_prerolled_attempts_rows_per_sec" -> rpsPreAttempts,
+          "duty_cycle_25pane_rows_per_sec" -> rpsPane,
+          "duty_cycle_25pane_prerolled_rows_per_sec" -> rpsPanePre,
+          "preroll_crossover_25pane" ->
+            (if (rpsPane > 0) rpsPanePre.toDouble / rpsPane else -1.0),
+          "duty_cycle_60pane_rows_per_sec" -> rpsPane60,
+          "duty_cycle_60pane_prerolled_rows_per_sec" -> rpsPane60Pre,
+          "preroll_crossover_60pane" ->
+            (if (rpsPane60 > 0) rpsPane60Pre.toDouble / rpsPane60 else -1.0),
+          "duty_cycle_hot_key_rows_per_sec" -> rpsHot,
+          "hot_key_frac" -> 0.6, "hot_key_slowdown" -> hotRatio,
+          "rollup_full_sketch_rows_per_sec" -> rpsRollupFull,
+          "rocksdb_rows_per_sec_base_keys" -> rpsRocksBase,
+          "rocksdb_rows_per_sec_10x_keys" -> rpsRocks10x,
+          "state_keys_factor" -> 10, "state_scale_ratio" -> stateScaleRatio,
+          "input_rows" -> n, "baseline_rows_per_sec" -> 100000),
           math.max(rps, rpsPre))
       } finally { cleanup(dir); cleanup(hotDir) }
-    } catch { case NonFatal(t) => (s""","streaming":{"error":"${jsonErr(t)}"}""", -1L) }
+    }
 
     // end-of-run contention sample: drift vs the start sample flags a run
     // that degraded mid-flight (another tenant landed on the box)
@@ -1381,31 +1340,46 @@ object Bench {
     // worst_probe_ratio covers the UNIFORM 10× rows only; the two-sided
     // (100× work) probe is normalized per unit of expected work and emitted
     // under its own key so the headline never conflates the two scales
+    val uniformRows = scaleProbe.map(_._2).getOrElse(Nil)
+    val skewRows = skewProbe.map(_._2).getOrElse(Nil)
+    val headline = Headline(
+      probeWorst = scaleProbe.map(p => worstRatio(p._2)).getOrElse(-1.0),
+      probeTwoSidedPerUnit = scaleProbe.map(_._3).getOrElse(-1.0),
+      skewWorst = skewProbe.map(p => worstRatio(p._2)).getOrElse(-1.0),
+      probeWorstQuery = worstRow(uniformRows).map(_.name),
+      skewWorstQuery = worstRow(skewRows).map(_.name),
+      streamingRps = streaming.map(_._2).getOrElse(-1L))
     // the worst uniform/skew rows' attribution objects ride in THIS (file)
     // summary (VERDICT r11 #5): stall-vs-superlinear must be decidable from
     // the artifact alone —
     // "query" names the plan, "retried" says the >10× reading survived a
     // re-measurement, "row_sentinel_sec" is the fixed-cost CPU sentinel
     // sampled AT the row (≫ ~0.17 s ⇒ the box, not the plan)
-    val summary = s""""summary":{"total_sec":$total,"n_queries":${results.size},""" +
-      s""""n_errors":${errors.size},""" +
-      s""""worst_probe_ratio":$probeWorst,"worst_uniform_ratio":$probeWorst,""" +
-      s""""worst_twosided_per_unit":$probeTwoSidedPerUnit,"worst_skew_ratio":$skewWorst,""" +
-      s""""worst_uniform_query":$probeWorstQuery,"worst_skew_query":$skewWorstQuery,""" +
-      s""""worst_uniform_attrib":$probeWorstAttrib,"worst_skew_attrib":$skewWorstAttrib,""" +
-      s""""streaming_rows_per_sec":$streamingRps,""" +
-      s""""load_avg_start":$loadAvgStart,"sentinel_start_sec":$sentinelStartSec}"""
-    val fullJson =
-      s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir",""" +
-        s"""$summary${contention.json}$streamingJson$rollupServingJson$indexServingJson$shingleGovernanceJson$pairStreamingJson$longDocJson$probeJson$skewJson${errorsJson(errors)},"queries":$qs}"""
-    val line = stdoutLine(sfDir, results, errors,
-      Headline(probeWorst, probeTwoSidedPerUnit, skewWorst, probeWorstQuery, skewWorstQuery,
-        streamingRps),
-      contention)
+    val attribs = Seq(
+      "worst_uniform_attrib" -> worstRow(uniformRows).map(_.attrib),
+      "worst_skew_attrib" -> worstRow(skewRows).map(_.attrib))
+    val fullJson = Json.write(Json.obj(Seq(
+      "metric" -> "total", "value" -> total, "unit" -> "sec", "sf" -> sfDir,
+      "summary" -> summary(results, errors, headline, contention, identity, attribs),
+      "contention" -> contention.node,
+      "streaming" -> streaming.map(_._1),
+      "rollup_serving" -> rollupServing,
+      "index_serving" -> indexServing,
+      "auto_growk_stream" -> autoGrowk,
+      "shingle_governance" -> shingleGovernance,
+      "pairstore_streaming" -> pairStreaming,
+      "long_doc_probe" -> longDoc,
+      "scale_probe" -> scaleProbe.map(_._1)) ++
+      scaleProbe.toOption.map("ivf_index_scale" -> _._4) ++
+      Seq("scale_probe_skew" -> skewProbe.map(_._1)) ++
+      errorsMember(errors) :+
+      ("queries" -> Json.obj(results: _*)): _*))
+    val line = stdoutLine(sfDir, results, errors, headline, contention)
     try {
       for (p <- Seq("/tmp/bench_last.json", s"/tmp/bench_last_c$cpus.json"))
         java.nio.file.Files.write(java.nio.file.Paths.get(p), fullJson.getBytes("UTF-8"))
-      println(s"""{"bench_json_file":"/tmp/bench_last.json","bench_json_file_leg":"/tmp/bench_last_c$cpus.json"}""")
+      println(Json.write(Json.obj("bench_json_file" -> "/tmp/bench_last.json",
+        "bench_json_file_leg" -> s"/tmp/bench_last_c$cpus.json")))
     } catch { case NonFatal(_) => () }
     println(line)
     spark.stop()
@@ -1414,7 +1388,7 @@ object Bench {
   /** The stdout summary's figures beside the catalog timings. */
   private[graft] final case class Headline(
       probeWorst: Double, probeTwoSidedPerUnit: Double, skewWorst: Double,
-      probeWorstQuery: String, skewWorstQuery: String, streamingRps: Long)
+      probeWorstQuery: Option[String], skewWorstQuery: Option[String], streamingRps: Long)
 
   /** Contention self-identification: the 1-min load average and the
     * fixed-cost CPU sentinel, sampled at the start and at the end of a run.
@@ -1422,26 +1396,42 @@ object Bench {
   private[graft] final case class Contention(
       cpus: Int, loadAvgStart: Double, loadAvgEnd: Double,
       sentinelStartSec: Double, sentinelEndSec: Double) {
-    def json: String =
-      s""","contention":{"cpus":$cpus,"load_avg_start":$loadAvgStart,""" +
-        s""""load_avg_end":$loadAvgEnd,"sentinel_start_sec":$sentinelStartSec,""" +
-        s""""sentinel_end_sec":$sentinelEndSec}"""
+    def node: ObjectNode = Json.obj("cpus" -> cpus, "load_avg_start" -> loadAvgStart,
+      "load_avg_end" -> loadAvgEnd, "sentinel_start_sec" -> sentinelStartSec,
+      "sentinel_end_sec" -> sentinelEndSec)
   }
 
   private[graft] def catalogTotal(results: Seq[(String, Double)]): Double =
     results.map(_._2).filter(_ >= 0).sum
 
-  /** The `"errors"` member (with its leading comma); empty when none failed. */
-  private def errorsJson(errors: scala.collection.Map[String, String]): String =
-    if (errors.isEmpty) ""
-    else errors.map { case (k, v) => s""""$k":"$v"""" }
-      .mkString(""","errors":{""", ",", "}")
+  /** The `"errors"` member; none when no query failed. */
+  private def errorsMember(errors: scala.collection.Map[String, String]): Seq[(String, Any)] =
+    if (errors.isEmpty) Nil else Seq("errors" -> Json.obj(errors.toSeq: _*))
+
+  /** `v` rounded to `places` decimals. */
+  private def roundTo(v: Double, places: Int): Double = {
+    val s = math.pow(10, places)
+    math.rint(v * s) / s
+  }
 
   /** Rounded to 4 decimals — 0.1 ms, two orders below query noise. */
-  private def r4(v: Double): String = {
-    val r = math.rint(v * 10000) / 10000
-    if (r == math.floor(r) && math.abs(r) < 1e15) s"${r.toLong}.0" else r.toString
-  }
+  private def r4(v: Double): Double = roundTo(v, 4)
+
+  /** The run summary; `fmt` formats its ratios and totals (4 decimals on
+    * stdout, full precision in the file) and `attribs` (the worst rows'
+    * attribution objects, file only) follow the worst-query names.
+    */
+  private def summary(results: Seq[(String, Double)],
+      errors: scala.collection.Map[String, String], h: Headline, c: Contention,
+      fmt: Double => Double, attribs: Seq[(String, Any)]): ObjectNode =
+    Json.obj(Seq("total_sec" -> fmt(catalogTotal(results)), "n_queries" -> results.size,
+      "n_errors" -> errors.size,
+      "worst_probe_ratio" -> fmt(h.probeWorst), "worst_uniform_ratio" -> fmt(h.probeWorst),
+      "worst_twosided_per_unit" -> fmt(h.probeTwoSidedPerUnit),
+      "worst_skew_ratio" -> fmt(h.skewWorst),
+      "worst_uniform_query" -> h.probeWorstQuery, "worst_skew_query" -> h.skewWorstQuery) ++
+      attribs ++ Seq("streaming_rows_per_sec" -> h.streamingRps,
+      "load_avg_start" -> c.loadAvgStart, "sentinel_start_sec" -> c.sentinelStartSec): _*)
 
   /** The one stdout line. It must survive a bounded tail capture
     * AND parse as one JSON document (four straight rounds of ~17 KB lines
@@ -1464,18 +1454,10 @@ object Bench {
       results: Seq[(String, Double)],
       errors: scala.collection.Map[String, String],
       h: Headline,
-      c: Contention): String = {
-    val total = catalogTotal(results)
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + r4(v) }
-      .mkString("{", ",", "}")
-    val summary = s""""summary":{"total_sec":${r4(total)},"n_queries":${results.size},""" +
-      s""""n_errors":${errors.size},""" +
-      s""""worst_probe_ratio":${r4(h.probeWorst)},"worst_uniform_ratio":${r4(h.probeWorst)},""" +
-      s""""worst_twosided_per_unit":${r4(h.probeTwoSidedPerUnit)},"worst_skew_ratio":${r4(h.skewWorst)},""" +
-      s""""worst_uniform_query":${h.probeWorstQuery},"worst_skew_query":${h.skewWorstQuery},""" +
-      s""""streaming_rows_per_sec":${h.streamingRps},""" +
-      s""""load_avg_start":${c.loadAvgStart},"sentinel_start_sec":${c.sentinelStartSec}}"""
-    s"""{"metric":"total","value":${r4(total)},"unit":"sec","sf":"$sfDir",""" +
-      s""""queries":$qs${errorsJson(errors)},$summary${c.json}}"""
-  }
+      c: Contention): String =
+    Json.write(Json.obj(Seq("metric" -> "total", "value" -> r4(catalogTotal(results)),
+      "unit" -> "sec", "sf" -> sfDir,
+      "queries" -> Json.obj(results.map { case (k, v) => k -> r4(v) }: _*)) ++
+      errorsMember(errors) ++
+      Seq("summary" -> summary(results, errors, h, c, r4, Nil), "contention" -> c.node): _*))
 }

@@ -90,7 +90,7 @@ object Tables {
   // embeddings deliberately NOT fanned (r16, measured): the whole ANN/PQ
   // family reads 2 000 × 64-float vectors against broadcast queries or
   // centroids — ~10⁷ FLOPs, trivial next to one extra exchange + 32-task
-  // stage. Interleaved A/B (AbFanout, min-of-3): fan-out LOST on all 11
+  // stage. Interleaved A/B (CatalogBench CONF, min-of-3): fan-out LOST on all 11
   // embeddings queries tried (on/off 1.06–2.05, e.g. q_cosine_pairs 2.05,
   // q_ann_topk 1.66, q_kmeans_iter 1.24). Fan-out pays only where per-row
   // derivation dominates (5-gram shingles, md5 chains, media decode).

@@ -72,13 +72,13 @@ object AdcProfile {
       "7_full" -> (() => full()))
 
     for (r <- 1 to rounds; (name, fn) <- stages) {
-      val t0 = System.nanoTime()
-      val df = fn()
-      df.queryExecution.executedPlan // force analyze+optimize+plan
-      val t1 = System.nanoTime()
-      df.write.format("noop").mode("overwrite").save()
-      val t2 = System.nanoTime()
-      println(f"[adc] r$r $name%-12s plan=${(t1 - t0) / 1e9}%7.3f exec=${(t2 - t1) / 1e9}%7.3f")
+      val (df, plan) = graft.CatalogBench.timed {
+        val df = fn()
+        df.queryExecution.executedPlan // force analyze+optimize+plan
+        df
+      }
+      val exec = graft.CatalogBench.secs(df.write.format("noop").mode("overwrite").save())
+      println(f"[adc] r$r $name%-12s plan=$plan%7.3f exec=$exec%7.3f")
     }
     spark.stop()
   }

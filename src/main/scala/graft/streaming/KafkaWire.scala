@@ -117,13 +117,21 @@ object KafkaWire {
       .option("kafka.bootstrap.servers", conf.bootstrapServers)
       .option("topic", conf.outTopic)
 
-  /** The full job: Kafka source → Avro decode → duty cycle → keyed Kafka
-    * sink. Returns the un-started writer so the caller owns checkpointing
-    * and trigger cadence.
+  /** The job's body: Avro decode → duty cycle, planned by the measured
+    * pane-count rule ([[StreamingDutyCycle.planAuto]]) like the pipeline
+    * benchmark's ingest path. Source-agnostic: a Kafka stream or a batch
+    * frame of the same shape.
+    */
+  def dutyCycle(kafkaFrame: DataFrame, grid: GridConfig = GridConfig()): DataFrame =
+    StreamingDutyCycle.planAuto(decode(kafkaFrame).toDF(), grid)
+
+  /** The full job: Kafka source → [[dutyCycle]] → keyed Kafka sink. Returns
+    * the un-started writer so the caller owns checkpointing and trigger
+    * cadence.
     */
   def pipeline(
       spark: SparkSession,
       conf: KafkaConf = KafkaConf(),
       grid: GridConfig = GridConfig()): DataStreamWriter[Row] =
-    dutyCycleSink(StreamingDutyCycle.plan(decode(source(spark, conf)).toDF(), grid), conf)
+    dutyCycleSink(dutyCycle(source(spark, conf), grid), conf)
 }

@@ -38,4 +38,21 @@ class OnePathSpec extends AnyFunSuite {
   test("no runtime dot_arrays registration") {
     assert(filesWith("VectorFunctions.register").isEmpty)
   }
+
+  test("one timing loop") {
+    // the clock is read only inside CatalogBench.timed: every timed region
+    // of the harness mains goes through it, so they all time the same way
+    assert(filesWith("System.nanoTime").map(Paths.get(_).getFileName.toString) ==
+      Seq("CatalogBench.scala"))
+    val text = sources.collectFirst {
+      case (p, t) if p.getFileName.toString == "CatalogBench.scala" => t
+    }.get
+    val start = text.indexOf("def timed[")
+    assert(start >= 0)
+    val end = text.indexOf("\n  def ", start + 1)
+    val clocks = "System.nanoTime".r.findAllMatchIn(text).map(_.start).toSeq
+    assert(clocks.nonEmpty && clocks.forall(i => i > start && i < end))
+    // the A/B loop is CatalogBench's CONF mode, not a main of its own
+    assert(filesWith("object AbFanout").isEmpty)
+  }
 }

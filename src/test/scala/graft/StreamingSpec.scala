@@ -433,6 +433,30 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
     assert(decoded.sortBy(_.house_id) == readings.sortBy(_.house_id))
   }
 
+  test("kafka job body plans by the pane-count rule, like the ingest path") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+    import graft.streaming.KafkaWire
+    // two minutes of a few meters, as a batch Avro frame of the Kafka shape
+    val readings = (0 until 480).map { i =>
+      PowerReading(ts(1303132800L + i / 4), s"h${i % 2}", "lamp", s"h${i % 2}_a${i % 3}",
+        (i % 11).toDouble)
+    }
+    val frame = KafkaWire.toKeyedAvro(spark.createDataset(readings))
+    def aggregates(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.optimizedPlan.collect { case a: Aggregate => a }.size
+    // 5 panes at the defaults: the plain plan; 60 panes: the pre-rolled one
+    for ((grid, expected) <- Seq(
+        GridConfig() -> 1, GridConfig(windowMin = 24, slideOverrideSec = Some(1)) -> 2)) {
+      val body = KafkaWire.dutyCycle(frame, grid)
+      assert(aggregates(body) == expected, s"panes ${grid.windowSec / grid.slideSec}")
+      val plain = StreamingDutyCycle.plan(KafkaWire.decode(frame).toDF(), grid)
+      assert(body.columns.toSeq == plain.columns.toSeq)
+      val rows = body.collect().toSeq.sortBy(_.toString)
+      assert(rows.nonEmpty && rows == plain.collect().toSeq.sortBy(_.toString))
+    }
+  }
+
   test("kafka source wiring is real code: resolution fails only at load()") {
     // the connector jar is absent here, so the data source must fail to
     // RESOLVE — proving the option wiring executes (not documentation)
